@@ -18,9 +18,13 @@ payload; otherwise the "queries" dict keeps as many entries as fit
 (slowest first, the ones that matter for grading) plus
 ``queries_omitted``/``queries_file`` pointers — and the COMPLETE
 payload is always written to ``BENCH_DETAIL.json`` at the repo root,
-which the end-of-round commit preserves. The payload also embeds the
-common-query ratio vs the newest machine-readable prior round so the
-round-over-round trend survives even if per-query detail is elided.
+which the end-of-round commit preserves. A run at any other core count
+than the session default of 32 (``SPARK_GRAFT_CPUS=8``, the low-core
+scaling probe) writes ``BENCH_DETAIL_c8.json`` instead, so it never
+overwrites the main run's detail; the payload stamps ``cpus``. The
+payload also embeds the common-query ratio vs the newest
+machine-readable prior round so the round-over-round trend survives
+even if per-query detail is elided.
 """
 
 from __future__ import annotations
@@ -57,6 +61,8 @@ from tools.regimestamp import CANARY_ROWS as _CANARY_ROWS
 from tools.regimestamp import band as _canary_band
 from tools.regimestamp import canary as _canary
 
+from mqtt_influx_storage_service_spark.session import local_cpus
+
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -84,10 +90,6 @@ def main() -> int:
     # long-lived deployment) and min-of-2 shields the number from
     # noisy-neighbor CPU on shared hardware. One broken query reports
     # null instead of aborting the suite (VERDICT r2 "What's wrong" #2).
-    from mqtt_influx_storage_service_spark.operators.dedup import (
-        release_semantic,
-    )
-    from mqtt_influx_storage_service_spark.operators.similarity import release_mmr
 
     # Contention gate (VERDICT r11 #4): r10 and r11 both shipped
     # artifacts whose in-run canary drift (35.2%, then 66.4%) said the
@@ -103,7 +105,7 @@ def main() -> int:
     crash: dict | None = None
     for attempt_i in range(_MAX_ATTEMPTS):
         try:
-            att = _run_suite(spark, qs, sf_dir, release_mmr, release_semantic)
+            att = _run_suite(spark, qs, sf_dir)
         except Exception as exc:  # noqa: BLE001 - a retry crash must not
             # discard a completed earlier attempt: the gate exists to
             # SALVAGE contended runs, so publish what we have — but the
@@ -138,51 +140,21 @@ _DRIFT_GATE_PCT = 15.0
 _MAX_ATTEMPTS = 3
 
 
-def _run_suite(spark, qs, sf_dir, release_mmr, release_semantic) -> dict:
+def _run_suite(spark, qs, sf_dir) -> dict:
     """One full measurement attempt: start canary → every registered
     query (min-of-2 + the top-decile variance phase) → end canary."""
+    from mqtt_influx_storage_service_spark.cache import release_for
+
     canary_start = _canary(spark)
 
     timings: dict[str, float | None] = {}
     rep_times: dict[str, list[float]] = {}
 
     def _one_rep(name: str) -> float:
-        if name == "sim_mmr":
-            # sim_mmr memoizes its persisted pool+picks; without
-            # this the second rep times the cache, not the plan
-            # (VERDICT r4 "What's wrong").
-            release_mmr(spark)
-        if name in ("dedup_semantic", "dedup_semantic_ivf"):
-            # since r7 the SemDeDup assignment persists behind the
-            # campaign cache seam — release it so reps time the plan
-            release_semantic(spark)
-        if name in ("text_dsir_importance", "pipeline_dsir_resample"):
-            # same discipline for the DSIR count cache (late r7)
-            from mqtt_influx_storage_service_spark.operators.textops import (
-                release_dsir,
-            )
-
-            release_dsir(spark)
-        if name in ("text_bm25", "sim_hybrid_rrf"):
-            # r14 added the query-vocab tf persist; without a per-rep
-            # release the published floor times the warm cache, not
-            # the plan (VERDICT r14 #2 — the r4 sim_mmr precedent)
-            from mqtt_influx_storage_service_spark.operators.textops import (
-                release_bm25,
-            )
-
-            release_bm25(spark)
-        if name in (
-            "pipeline_training_mix",
-            "pipeline_token_budget",
-            "pipeline_epochs",
-        ):
-            # same discipline for the r14 curated-survivors persist
-            from mqtt_influx_storage_service_spark.operators.pipeline import (
-                release_curated,
-            )
-
-            release_curated(spark)
+        # a query that memoizes its own campaign persist declares it
+        # cold (operators.COLD_TAGS); without the release the second
+        # rep times the warm cache, not the plan
+        release_for(spark, name)
         t0 = time.time()
         df = qs[name](spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
@@ -494,8 +466,16 @@ _REPO = os.path.dirname(os.path.abspath(__file__))
 _MIN_INLINE_QUERIES = 10
 
 
+def _detail_file() -> str:
+    cpus = local_cpus()
+    return "BENCH_DETAIL.json" if cpus == "32" else f"BENCH_DETAIL_c{cpus}.json"
+
+
 def _emit(payload: dict) -> None:
-    with open(os.path.join(_REPO, "BENCH_DETAIL.json"), "w") as fh:
+    cpus = local_cpus()
+    payload["cpus"] = int(cpus) if cpus.isdigit() else cpus
+    detail = _detail_file()
+    with open(os.path.join(_REPO, detail), "w") as fh:
         json.dump(payload, fh, indent=1, sort_keys=False)
         fh.write("\n")
     line = json.dumps(payload, separators=(",", ":"))
@@ -511,7 +491,7 @@ def _emit(payload: dict) -> None:
         reverse=True,
     )
     slim = dict(payload)
-    slim["queries_file"] = "BENCH_DETAIL.json"
+    slim["queries_file"] = detail
 
     def _shed_variance_notes(p: dict) -> None:
         p["top_decile_variance"] = {

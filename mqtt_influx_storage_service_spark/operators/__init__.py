@@ -38,8 +38,15 @@ from . import (
 # tools/check_oracles.py runs the FULL registry regardless — the
 # prefix only bounds what the driver re-certifies per round.
 _PRIORITY = [
+    # ---- Slots 1-4: the exact-count fork family. The r15 fork changed
+    # their plans and none holds a driver row on the new plan; all four
+    # read the campaign caches that now live in ``cache.py``.
+    "dedup_ngram_jaccard",
+    "dedup_containment",
+    "dedup_components",
+    "pipeline_dedup_mix",
     # ---- r15 ROTATION (VERDICT r14 "Next round" #7 — the queue the
-    # r14 rotation comment recorded). Slots 1-41: the full r10-green
+    # r14 rotation comment recorded). Slots 5-45: the full r10-green
     # cohort, now the oldest driver rows in the registry (recomputed
     # from CORRECTNESS_r01..r14 this round: 41 entries whose newest
     # driver row is r10 — the r14 comment said 42; the recount says
@@ -85,33 +92,47 @@ _PRIORITY = [
     "win_rollup",
     "win_topk_per_group",
     "win_value_frames",
-    # Slots 42-50: r15-touched entries first (re-certification
-    # insurance for every query whose plan or measurement seam changed
-    # this round — the r10-r14 precedent), then the alphabetical head
-    # of the r11 cohort as filler. The r15-touched set: the two mm
-    # kernels whose rebalance decision this round re-measures, and the
-    # five queries whose bench floors move to cold-plan timing (their
-    # PLANS are unchanged; slots are insurance that the release-seam
-    # change kept them green).
-    "mm_extract_features",
-    "mm_frame_sample",
+    # Slots 46-50: the five queries whose cold-rep release the cache
+    # owner rewired (their PLANS are unchanged; slots are insurance
+    # that the release change kept them green).
     "text_bm25",
     "sim_hybrid_rrf",
     "pipeline_training_mix",
     "pipeline_token_budget",
     "pipeline_epochs",
-    # r11-cohort filler to slot 50
-    "iq_cmo",
-    "iq_drop_series",
-    # ---- slot 50 boundary. r16 ROTATION QUEUE (if a next round
-    # exists): the remaining r11 cohort (iq_ema, iq_ker, iq_math,
+    # ---- slot 50 boundary. Moved past it to make room for the fork
+    # family: the two mm kernels (driver-certified in r15) and the two
+    # r11-cohort fillers. NEXT ROTATION QUEUE: iq_cmo, iq_drop_series,
+    # then the remaining r11 cohort (iq_ema, iq_ker, iq_math,
     # iq_retention_filter, iq_retention_policies, iq_rsi,
     # iq_show_tag_values_regex, iq_show_tag_values_where, iq_soffset,
     # iq_tag_regex, iq_top_tags, iq_transform_nested, iq_trix, iq_tz,
     # pipeline_shard_plan, pipeline_temperature_mix,
-    # ref_narrow_points, ...), then the r12 cohort. After THIS round
-    # no registry entry's newest driver row is older than r11.
+    # ref_narrow_points, ...), then the r12 cohort.
+    "iq_cmo",
+    "iq_drop_series",
+    "mm_extract_features",
+    "mm_frame_sample",
 ]
+
+# Queries whose timed reps must start cold: each memoizes its own
+# campaign persist (``cache.campaign``), so without a release before a
+# rep the second rep times the warm cache, not the plan (VERDICT r4,
+# r14 #2). ``cache.release_for(spark, name)`` releases these tags; the
+# shared dedup-family caches (shingles, edges, labels, candidates) stay
+# warm across a suite on purpose.
+COLD_TAGS: dict[str, tuple[str, ...]] = {
+    "sim_mmr": ("mmr",),
+    "dedup_semantic": ("semantic",),
+    "dedup_semantic_ivf": ("semantic",),
+    "text_dsir_importance": ("dsir",),
+    "pipeline_dsir_resample": ("dsir",),
+    "text_bm25": ("bm25",),
+    "sim_hybrid_rrf": ("bm25",),
+    "pipeline_training_mix": ("curated",),
+    "pipeline_token_budget": ("curated",),
+    "pipeline_epochs": ("curated",),
+}
 
 _MODULES = [
     influxqlq,

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..cache import campaign
 from ..sources import load_table
 from ..sources.tables import table_row_count
 
@@ -106,9 +107,6 @@ _SHINGLES_SQL = """
 """
 
 
-_SHINGLE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, shingles, n_shingles) for every doc with >= 3 tokens.
 
@@ -123,20 +121,20 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (candidate generation + exact-Jaccard verify, or explode + count
     lookup), and shingling is the expensive leg of those pipelines —
     measured ~40% off dedup_minhash_lsh at sf0.1. The persisted handle
-    is registered in ``_SHINGLE_CACHE`` (one entry per (app, sf_dir))
-    so :func:`release_shingles` can unpersist deterministically — a
-    long-lived service otherwise pins executor memory per sf_dir
+    is owned by the campaign cache (tag ``shingles``, one entry per
+    (app, sf_dir)) so ``cache.release`` can unpersist deterministically
+    — a long-lived service otherwise pins executor memory per sf_dir
     forever. At 100 TB the same role is played by checkpointing the
     shingle table once per dedup campaign and deleting it after.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SHINGLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    docs = load_table(spark, sf_dir, "documents", rebalance=True)
-    out = _shingles_df(docs).persist()
-    _SHINGLE_CACHE[key] = out
-    return out
+    return campaign(
+        spark,
+        "shingles",
+        sf_dir,
+        lambda: _shingles_df(
+            load_table(spark, sf_dir, "documents", rebalance=True)
+        ).persist(),
+    )
 
 
 def _shingles_df(docs: DataFrame) -> DataFrame:
@@ -163,61 +161,6 @@ def _shingles_df(docs: DataFrame) -> DataFrame:
         F.size("shingles").alias("n_shingles"),
         F.transform(F.col("shingles"), _shingle_hash64).alias("shingles_h"),
     )
-
-
-# Campaign caches owned by OTHER modules (e.g. the pipeline tier's
-# curated-survivors relation) that must be released with the same
-# lifecycle as the shingle/edge/label caches. Registered at import
-# time; a plain list avoids a dedup->pipeline import cycle.
-_EXTRA_CAMPAIGN_CACHES: list[dict] = []
-
-
-def _register_campaign_cache(cache: dict) -> None:
-    _EXTRA_CAMPAIGN_CACHES.append(cache)
-
-
-def release_shingles(spark: SparkSession | None = None) -> int:
-    """Unpersist every cached shingle table (optionally only those of
-    one session) and return how many were released. Call when a dedup
-    campaign over an sf_dir is done; safe to call at any time — the
-    next consumer just re-persists."""
-    released = 0
-    for cache in (
-        _SHINGLE_CACHE,
-        _EDGE_CACHE,
-        _LABEL_CACHE,
-        _SEM_CACHE,
-        _WINDOW_INDEX_CACHE,
-        _CAND_CACHE,
-        *_EXTRA_CAMPAIGN_CACHES,
-    ):
-        for key in list(cache):
-            if spark is not None and key[0] != spark.sparkContext.applicationId:
-                continue
-            cache.pop(key).unpersist()
-            _CAND_COUNT.pop(key, None)
-            released += 1
-    # the over-cap statistic rides the same campaign lifecycle (it is
-    # a plain bool, not a persisted frame — popped, nothing to
-    # unpersist)
-    for key in list(_OVERCAP_CACHE):
-        if spark is not None and key[0] != spark.sparkContext.applicationId:
-            continue
-        _OVERCAP_CACHE.pop(key)
-    return released
-
-
-def release_semantic(spark: SparkSession | None = None) -> int:
-    """Unpersist only the SemDeDup assignment cache — the bench calls
-    this between dedup_semantic reps so they time the plan, not the
-    campaign cache (the release_mmr discipline)."""
-    released = 0
-    for key in list(_SEM_CACHE):
-        if spark is not None and key[0] != spark.sparkContext.applicationId:
-            continue
-        _SEM_CACHE.pop(key).unpersist()
-        released += 1
-    return released
 
 
 # --------------------------------------------------------------------------
@@ -409,38 +352,29 @@ VERIFY_GRID_B = 8            # replication per side; byte win needs mult > 2B
 VERIFY_GRID_MIN_MULT = 64
 VERIFY_GRID_B_MAX = 64   # replication cap: 4096 cells, the √P bound
 
-_CAND_CACHE: dict[tuple, DataFrame] = {}   # (appId, sf_dir, tag) -> persisted
-_CAND_COUNT: dict[tuple, int] = {}
-
-# (appId, sf_dir) -> bool: does the corpus contain ANY shingle with
-# df > SHINGLE_DF_CAP? The runtime statistic behind the r15 exact-count
-# verify fork (see _scored_shingle_pairs). Measured once per campaign
-# (one map-combinable aggregation over the exploded shingle index,
-# the same one-count-job-per-campaign budget as _persisted_candidates)
-# and released with the campaign caches.
-_OVERCAP_CACHE: dict[tuple[str, str], bool] = {}
-
-
 def _corpus_has_overcap(spark: SparkSession, sf_dir: str) -> bool:
     """True iff any blocking shingle's document frequency exceeds
     SHINGLE_DF_CAP — i.e. the df cap's sampled rescue tier is LIVE for
     this corpus and candidate co-occurrence counts can undercount true
     intersections. Exactness matters (a false 'clean' would publish
     wrong n_inter values), so this is a full count over the campaign's
-    persisted shingle relation, not a sample; memoized per campaign."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _OVERCAP_CACHE.get(key)
-    if cached is None:
+    persisted shingle relation, not a sample. The runtime statistic
+    behind the r15 exact-count verify fork (see _scored_shingle_pairs):
+    one map-combinable aggregation per campaign (the same
+    one-count-job-per-campaign budget as _persisted_candidates),
+    memoized under the campaign tag ``overcap``."""
+
+    def build() -> bool:
         ds = _doc_shingles(spark, sf_dir)
-        cached = not (
+        return not (
             ds.select(F.explode("shingles_h").alias("shingle"))
             .groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("df"))
             .filter(F.col("df") > SHINGLE_DF_CAP)
             .isEmpty()
         )
-        _OVERCAP_CACHE[key] = cached
-    return cached
+
+    return campaign(spark, "overcap", sf_dir, build)
 
 
 def _persisted_candidates(
@@ -448,7 +382,7 @@ def _persisted_candidates(
 ) -> tuple[DataFrame, int]:
     """Persist + count a candidate pair set once per (app, sf_dir, tag)
     campaign — the runtime statistic the verify-plan choice needs.
-    Released by :func:`release_shingles`.
+    Owned by the campaign cache under the tag ``candidates``.
 
     TAG CONTRACT (ADVICE r13): one tag == one candidate BUILDER. The
     cache key ignores the passed ``cand`` plan on a hit, so every
@@ -460,12 +394,12 @@ def _persisted_candidates(
     mint a NEW tag, not reuse one with a different construction —
     silently verifying against another builder's persisted candidates
     is the failure mode this line exists to prevent."""
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    if key not in _CAND_CACHE:
+
+    def build() -> tuple[DataFrame, int]:
         df = cand.persist()
-        _CAND_COUNT[key] = df.count()
-        _CAND_CACHE[key] = df
-    return _CAND_CACHE[key], _CAND_COUNT[key]
+        return df, df.count()
+
+    return campaign(spark, "candidates", (sf_dir, tag), build)
 
 
 def _grid_cells(col: str, b: int):
@@ -857,9 +791,6 @@ WHERE round(n_inter / (ca.n_shingles + cb.n_shingles - n_inter), 6)
 # at sf0.01 on the doubling form vs ~linear cost on this one).
 CC_ROUNDS = 5
 
-_EDGE_CACHE: dict[tuple, DataFrame] = {}  # (appId, sf_dir[, "self"])
-
-
 # Per-node propagation-edge cap (VERDICT r4 #5): dup-group edge count
 # is quadratic in group size (a 100-member boilerplate cluster emits
 # 4 950 pairs), and every propagation round re-joins the whole edge
@@ -931,16 +862,17 @@ def _dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     idempotent and an edge-level distinct is a full shuffle of the edge
     set at 100 TB for zero semantic gain.
 
-    Persisted via the same keyed-cache discipline as
-    :func:`_doc_shingles` (released by :func:`release_shingles`):
-    the components loop below reads the edges once per round, and
-    recomputing the shingle self-join per round would multiply the
-    dominant cost by CC_ROUNDS.
+    Persisted under the campaign tag ``edges`` (the
+    :func:`_doc_shingles` discipline): the components loop below reads
+    the edges once per round, and recomputing the shingle self-join per
+    round would multiply the dominant cost by CC_ROUNDS.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _EDGE_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return campaign(
+        spark, "edges", sf_dir, lambda: _capped_sym_edges(spark, sf_dir)
+    )
+
+
+def _capped_sym_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym_all = _dup_edges_all(spark, sf_dir)
     # one sorted window pass: row_number and the whole-partition min
     # share (partitionBy, orderBy), so Catalyst evaluates both in a
@@ -985,7 +917,6 @@ def _dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(F.col("dst"))
         .persist()
     )
-    _EDGE_CACHE[key] = sym
     return sym
 
 
@@ -1009,9 +940,6 @@ def component_edge_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LABEL_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-
-
 def _component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, label) for every node of the edge-induced subgraph,
     label = min doc_id within CC_ROUNDS hops (= the component min for
@@ -1020,16 +948,18 @@ def _component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``coalesce(label, doc_id)`` after a left join, which keeps this
     table candidate-pair-sized (broadcastable) at any corpus scale.
 
-    Persisted (same keyed-cache discipline as :func:`_doc_shingles`,
-    released by :func:`release_shingles`): every consumer reads it at
-    least twice (size rollup + corpus assignment, or the pipeline's
+    Persisted under the campaign tag ``labels`` (the
+    :func:`_doc_shingles` discipline): every consumer reads it at least
+    twice (size rollup + corpus assignment, or the pipeline's
     broadcast), and each uncached read would re-run the CC_ROUNDS
     join+agg chain.
     """
-    key = (spark.sparkContext.applicationId, sf_dir, CC_ROUNDS)
-    cached = _LABEL_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return campaign(
+        spark, "labels", (sf_dir, CC_ROUNDS), lambda: _propagated_labels(spark, sf_dir)
+    )
+
+
+def _propagated_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = _dup_edges(spark, sf_dir)
     nodes = sym.select(F.col("src").alias("doc_id")).distinct()
     # Self-loops make "min over neighbors' labels" include the node's
@@ -1044,21 +974,18 @@ def _component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     # removes. Deriving it from the already-persisted ``sym`` makes
     # the double cache-scan cheap, and the extra footprint is E+V
     # rows — candidate-subgraph-sized, same order as the edge cache
-    # itself. Registered in _EDGE_CACHE so release_shingles frees it
-    # with the campaign.
-    skey = (spark.sparkContext.applicationId, sf_dir, "self")
-    sym_self = _EDGE_CACHE.get(skey)
-    if sym_self is None:
-        sym_self = (
-            sym.unionByName(
-                nodes.select(
-                    F.col("doc_id").alias("src"), F.col("doc_id").alias("dst")
-                )
-            )
-            .repartition(F.col("dst"))
-            .persist()
+    # itself. Held under the campaign tag ``edges`` so it is freed
+    # with the edge cache.
+    sym_self = campaign(
+        spark,
+        "edges",
+        (sf_dir, "self"),
+        lambda: sym.unionByName(
+            nodes.select(F.col("doc_id").alias("src"), F.col("doc_id").alias("dst"))
         )
-        _EDGE_CACHE[skey] = sym_self
+        .repartition(F.col("dst"))
+        .persist(),
+    )
     labels = nodes.select("doc_id", F.col("doc_id").alias("label"))
     for _ in range(CC_ROUNDS):
         labels = (
@@ -1072,9 +999,7 @@ def _component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.min("dlabel").alias("label"))
             .withColumnRenamed("src", "doc_id")
         )
-    labels = labels.persist()
-    _LABEL_CACHE[key] = labels
-    return labels
+    return labels.persist()
 
 
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2085,33 +2010,28 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WINDOW_INDEX_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _corpus_window_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus side of the at-ingest substring screen: the DISTINCT
     window hashes of every corpus document — one column (whash),
-    persisted once per campaign under the dedup-family cache seam
-    (``release_shingles`` drops it). At 100 TB this is the window-hash
+    persisted once per campaign under the campaign tag
+    ``window_index``. At 100 TB this is the window-hash
     twin of the MinHash band index: built once, bucketed on whash on
     disk, probed by each micro-batch's (small, broadcast) window set.
     Kernel follows the corpus-size gate so the index and any batch
     screened against it hash identically."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _WINDOW_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
-    kernel = _substring_kernel(sf_dir)
-    docs = load_table(spark, sf_dir, "documents", rebalance=True)
-    out = (
-        _doc_windows(docs, kernel)
-        .filter(F.col("whash").isNotNull())
-        .select("whash")
-        .distinct()
-        .persist()
-    )
-    _WINDOW_INDEX_CACHE[key] = out
-    return out
+
+    def build() -> DataFrame:
+        kernel = _substring_kernel(sf_dir)
+        docs = load_table(spark, sf_dir, "documents", rebalance=True)
+        return (
+            _doc_windows(docs, kernel)
+            .filter(F.col("whash").isNotNull())
+            .select("whash")
+            .distinct()
+            .persist()
+        )
+
+    return campaign(spark, "window_index", sf_dir, build)
 
 
 def substring_screen(
@@ -2542,9 +2462,6 @@ LEFT JOIN counts c ON s.threshold = c.threshold
 SEMDEDUP_EPS = 0.35
 
 
-_SEM_CACHE: dict[tuple, DataFrame] = {}  # (appId, sf_dir[, variant])
-
-
 def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full SemDeDup pass (Abbas et al. 2023, arXiv:2303.09540) as
     ONE plan: coarse cluster assignment → within-cluster pairwise
@@ -2568,9 +2485,9 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     prune is an equi-join on the cluster id whose per-cluster
     expansion is the Σ list² SemDeDup budget. The ``assigned``
     relation appears on both sides of the prune join plus the output,
-    so it is PERSISTED behind the dedup-family cache seam
-    (``release_shingles`` releases it) — previously re-derived as 6
-    column-pruned scans per run; now one corpus pass per campaign.
+    so it is PERSISTED under the campaign tag ``semantic`` — previously
+    re-derived as 6 column-pruned scans per run; now one corpus pass
+    per campaign.
     """
     from ..sources import table_row_count
     from . import similarity as _S
@@ -2588,13 +2505,15 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _semantic_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, cl, cos_c, arr, nrm): each vector's exact-integer
     label-centroid assignment + priority key — persisted once per
-    (app, sf_dir) under the dedup-family cache discipline."""
+    (app, sf_dir) under the campaign tag ``semantic``."""
+    return campaign(
+        spark, "semantic", sf_dir, lambda: _label_centroid_assign(spark, sf_dir)
+    )
+
+
+def _label_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .similarity import _dot
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _SEM_CACHE.get(key)
-    if cached is not None:
-        return cached
     emb = load_table(spark, sf_dir, "embeddings", rebalance=True)
     arr = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     vd = emb.select("vec_id", F.col("label").alias("lbl"), arr.alias("arr"))
@@ -2643,7 +2562,6 @@ def _semantic_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist()
     )
-    _SEM_CACHE[key] = assigned
     return assigned
 
 
@@ -2818,25 +2736,24 @@ def dedup_semantic_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumed THREE times (prune-join a-side, b-side, and the output
     # spine), and each consumer re-ran the corpus priority kernel —
     # three ArrowEvalPython evals of the same pass in the r13 plan.
-    # Persist it once behind the semantic cache seam (released by
-    # release_semantic, the _semantic_assigned discipline); the frame
-    # is gate-bounded (<= GEMM_EXACT_MAX rows x 24 B).
-    key = (spark.sparkContext.applicationId, sf_dir, "ivf_priority")
-    assigned = _SEM_CACHE.get(key)
-    if assigned is None:
-        assigned = (
-            emb.select(
-                "vec_id",
-                _ivf_priority_udf(centers)(F.col("embedding")).alias("a"),
-            )
-            .select(
-                "vec_id",
-                F.col("a.cl").alias("cl"),
-                F.col("a.cos_c").alias("cos_c"),
-            )
-            .persist()
+    # Persist it once under the campaign tag ``semantic`` (the
+    # _semantic_assigned discipline); the frame is gate-bounded
+    # (<= GEMM_EXACT_MAX rows x 24 B).
+    assigned = campaign(
+        spark,
+        "semantic",
+        (sf_dir, "ivf_priority"),
+        lambda: emb.select(
+            "vec_id",
+            _ivf_priority_udf(centers)(F.col("embedding")).alias("a"),
         )
-        _SEM_CACHE[key] = assigned
+        .select(
+            "vec_id",
+            F.col("a.cl").alias("cl"),
+            F.col("a.cos_c").alias("cos_c"),
+        )
+        .persist(),
+    )
     pairs = _gemm_threshold_pairs(spark, sf_dir, SEMDEDUP_EPS).select(
         "id_a", "id_b"
     )

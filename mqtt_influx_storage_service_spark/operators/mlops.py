@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..cache import campaign
 from ..sources import load_table
 from ..sources.tables import table_row_count
 from .dedup import JACCARD_THRESHOLD, _doc_shingles, _verify_joined
@@ -254,27 +255,6 @@ def _lloyd(sample: "np.ndarray", k: int = IVF_K, seed: int = 42,
     return C
 
 
-# Deterministic training is memoized per (app, sf-dir-proxy): the fit
-# re-runs identically every invocation, so sim_ann_ivf / sim_ann_ivf_pq
-# otherwise pay the sample-collect job (~3.5 s at the stress corpus)
-# PER CALL. Keyed like dedup._SHINGLE_CACHE; released by
-# release_ivf_training().
-_IVF_TRAIN_CACHE: dict[tuple[str, str], tuple["np.ndarray", "np.ndarray"]] = {}
-
-
-def release_ivf_training(spark: SparkSession | None = None) -> int:
-    """Drop memoized IVF training results (optionally only this
-    session's). Nothing is persisted on executors — the cache holds
-    driver-side numpy arrays — so this is bookkeeping, not unpersist."""
-    released = 0
-    for key in list(_IVF_TRAIN_CACHE):
-        if spark is not None and key[0] != spark.sparkContext.applicationId:
-            continue
-        _IVF_TRAIN_CACHE.pop(key)
-        released += 1
-    return released
-
-
 def _ivf_train(
     unit: DataFrame, n_vecs: int, cache_key: str | None = None
 ) -> tuple["np.ndarray", "np.ndarray"]:
@@ -287,29 +267,33 @@ def _ivf_train(
     comes from parquet footer metadata (driver-side, no Spark job) —
     df.count() here would fire a full-corpus job at plan-construction
     time (VERDICT r2 #4; pinned by test_ann_construction_fires_no_count).
+
+    The fit is deterministic, so with a ``cache_key`` (the sf-dir proxy)
+    it is memoized under the campaign tag ``ivf_train``: sim_ann_ivf /
+    sim_ann_ivf_pq otherwise pay the sample-collect job (~3.5 s at the
+    stress corpus) PER CALL. The entry holds driver-side numpy arrays,
+    nothing persisted on executors.
     """
-    # CEIL stride: floor would admit up to ~2x IVF_SAMPLE strided rows
-    # and the limit() below would then keep a partition-order-dependent
-    # (nondeterministic) subset — ceil keeps the strided set itself
-    # within the cap, so limit() is a pure guard that never cuts.
-    key = (
-        unit.sparkSession.sparkContext.applicationId,
-        f"{cache_key}:{n_vecs}",
-    ) if cache_key is not None else None
-    if key is not None and key in _IVF_TRAIN_CACHE:
-        return _IVF_TRAIN_CACHE[key]
-    stride = max(1, -(-n_vecs // IVF_SAMPLE))
-    rows = (
-        unit.filter(F.col("vec_id") % stride == 0)
-        .select("unit")
-        .limit(IVF_SAMPLE)
-        .collect()
-    )
-    sample = np.array([r.unit for r in rows])
-    out = (_lloyd(sample, k=_ivf_k(n_vecs)), sample)
-    if key is not None:
-        _IVF_TRAIN_CACHE[key] = out
-    return out
+
+    def fit() -> tuple["np.ndarray", "np.ndarray"]:
+        # CEIL stride: floor would admit up to ~2x IVF_SAMPLE strided
+        # rows and the limit() below would then keep a partition-order-
+        # dependent (nondeterministic) subset — ceil keeps the strided
+        # set itself within the cap, so limit() is a pure guard that
+        # never cuts.
+        stride = max(1, -(-n_vecs // IVF_SAMPLE))
+        rows = (
+            unit.filter(F.col("vec_id") % stride == 0)
+            .select("unit")
+            .limit(IVF_SAMPLE)
+            .collect()
+        )
+        sample = np.array([r.unit for r in rows])
+        return _lloyd(sample, k=_ivf_k(n_vecs)), sample
+
+    if cache_key is None:
+        return fit()
+    return campaign(unit.sparkSession, "ivf_train", f"{cache_key}:{n_vecs}", fit)
 
 
 def _unitize_np(embs: pd.Series) -> "np.ndarray":

@@ -25,8 +25,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import campaign
 from ..sources import load_table
-from .dedup import _component_labels, _edges_cte, _register_campaign_cache
+from .dedup import _component_labels, _edges_cte
 from .textops import (
     TEXT_DSIR_IMPORTANCE_SQL,
     text_dsir_importance,
@@ -44,44 +45,27 @@ from .textops import (
 )
 
 
-# Curated-survivors campaign cache: the three selection queries
-# (training_mix / token_budget / epochs) all start from the identical
-# survivor relation, and each uncached consumer re-ran the quality +
-# langid feature scan and the label assignment join. Persisted once
-# per (app, sf_dir) under the SAME release seam as the shingle/edge/
-# label caches (r14, guide §2.4: two operations keyed the same way
-# share one evaluation) — at 100 TB this is the campaign idiom of
-# materializing the curated survivor set once before the selection
-# passes. Registered with dedup.release_shingles for lifecycle.
-_CURATED_CACHE: dict[tuple[str, str], DataFrame] = {}
-_register_campaign_cache(_CURATED_CACHE)
-
-
-def release_curated(spark: SparkSession | None = None) -> int:
-    """Unpersist only the curated-survivors campaign cache — the bench
-    calls this between training_mix/token_budget/epochs reps so they
-    time the cold plan, not the warm persist (the release_mmr / r4
-    precedent; VERDICT r14 #2). The broader ``release_shingles`` seam
-    still covers it for campaign teardown."""
-    released = 0
-    for key in list(_CURATED_CACHE):
-        if spark is not None and key[0] != spark.sparkContext.applicationId:
-            continue
-        _CURATED_CACHE.pop(key).unpersist()
-        released += 1
-    return released
-
-
 def _curated_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The curated survivor set shared by the pipeline queries:
     (doc_id, n_tokens, quality_score, predicted_lang) for docs that are
     their dup group's representative AND pass the quality gate. One
-    corpus scan + one broadcast label join. Persisted per campaign
-    (see ``_CURATED_CACHE`` above)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _CURATED_CACHE.get(key)
-    if cached is not None:
-        return cached
+    corpus scan + one broadcast label join.
+
+    Persisted once per (app, sf_dir) under the campaign tag ``curated``:
+    the three selection queries (training_mix / token_budget / epochs)
+    all start from this identical relation, and each uncached consumer
+    re-ran the quality + langid feature scan and the label assignment
+    join (r14, guide §2.4: two operations keyed the same way share one
+    evaluation) — at 100 TB this is the campaign idiom of materializing
+    the curated survivor set once before the selection passes. The
+    three queries declare the tag cold (``operators.COLD_TAGS``) so
+    their timed reps measure the cold plan."""
+    return campaign(
+        spark, "curated", sf_dir, lambda: _curated_survivors(spark, sf_dir)
+    )
+
+
+def _curated_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", rebalance=True)
     feats = docs.select(
         "doc_id",
@@ -98,15 +82,13 @@ def _curated_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is dup-subgraph-node-sized — corpus-scale on dup-heavy corpora —
     # so a forced broadcast is the shingle-verify driver-kill class;
     # see dedup_components' assignment join for the full argument
-    out = (
+    return (
         feats.join(labels.hint("shuffle_hash"), "doc_id", "left_outer")
         .filter(F.coalesce("label", "doc_id") == F.col("doc_id"))
         .filter(F.col("quality_score") >= QUALITY_KEEP_THRESHOLD)
         .select("doc_id", "n_tokens", "quality_score", "predicted_lang")
         .persist()
     )
-    _CURATED_CACHE[key] = out
-    return out
 
 
 def pipeline_training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import campaign
 from ..sources import load_table
 from .dedup import _SHINGLES_SQL as _DEDUP_SHINGLES_SQL
 from .dedup import _shingles_of_tokens
@@ -1374,32 +1375,6 @@ BM25_QUERY_TERMS = 8     # query = first N distinct words of that doc
 BM25_TOPK = 5
 
 
-# Keyed persisted tf cache (r14, guide §5 caching + §2.4): the
-# vocabulary-pruned tf relation is consumed by BOTH the df aggregation
-# (broadcast build) and the scored chain; left unshared, each consumer
-# re-tokenized the corpus (stage-profiled at sf0.1: two 32-task
-# explode stages, 18.4 s of executor CPU for one query). Same keyed
-# cache + release discipline as dedup._doc_shingles; text_bm25 and
-# sim_hybrid_rrf share one materialization per campaign. The relation
-# is query-vocabulary-pruned (tokens matching the bounded query set's
-# words), so at 100 TB it persists MEMORY_AND_DISK at a fraction of
-# corpus token volume; the alternative is a second full corpus
-# tokenize per consumer.
-_BM25_TF_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def release_bm25(spark: SparkSession | None = None) -> int:
-    """Unpersist the cached BM25 tf relation(s); returns count released.
-    Twin of ``dedup.release_shingles``."""
-    released = 0
-    for key in list(_BM25_TF_CACHE):
-        if spark is not None and key[0] != spark.sparkContext.applicationId:
-            continue
-        _BM25_TF_CACHE.pop(key).unpersist()
-        released += 1
-    return released
-
-
 def _bm25_query_filter(id_col: str = "doc_id") -> F.Column:
     """Query-set membership predicate, shared by the lexical retriever
     (over doc_id) and the hybrid fusion's vector side (over vec_id) so
@@ -1434,9 +1409,18 @@ def _bm25_micro(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("word"),
         )
     )
-    key = (spark.sparkContext.applicationId, sf_dir)
-    tf = _BM25_TF_CACHE.get(key)
-    if tf is None:
+
+    # Persisted tf relation (r14, guide §5 caching + §2.4), campaign tag
+    # ``bm25``: it is consumed by BOTH the df aggregation (broadcast
+    # build) and the scored chain; left unshared, each consumer
+    # re-tokenized the corpus (stage-profiled at sf0.1: two 32-task
+    # explode stages, 18.4 s of executor CPU for one query). text_bm25
+    # and sim_hybrid_rrf share one materialization per campaign. The
+    # relation is query-vocabulary-pruned (tokens matching the bounded
+    # query set's words), so at 100 TB it persists MEMORY_AND_DISK at a
+    # fraction of corpus token volume; the alternative is a second full
+    # corpus tokenize per consumer.
+    def build_tf() -> DataFrame:
         tok = docs.select(
             "doc_id",
             F.size(_tokens()).alias("dl"),
@@ -1445,12 +1429,13 @@ def _bm25_micro(spark: SparkSession, sf_dir: str) -> DataFrame:
         tok_q = tok.join(
             F.broadcast(qterms.select("word").distinct()), "word"
         )
-        tf = (
+        return (
             tok_q.groupBy("doc_id", "dl", "word")
             .agg(F.count(F.lit(1)).alias("tf"))
             .persist()
         )
-        _BM25_TF_CACHE[key] = tf
+
+    tf = campaign(spark, "bm25", sf_dir, build_tf)
     # df falls out of tf for free: each (doc, word) is one tf row, so
     # df(word) = count(*) — aggregated to a vocabulary-bounded table
     # and broadcast back. Measured A/B at sf0.1: this groupBy+broadcast
@@ -1589,29 +1574,6 @@ TEXT_BM25_SQL = _BM25_RANKED_SQL_TMPL.format(
 
 DSIR_BUCKETS = 4096  # hashed n-gram feature space (paper: 10^4)
 
-# Campaign cache for the per-(doc, bucket) feature counts — the ONE
-# corpus-token-sized computation in the DSIR pass. Catalyst collapses
-# the agg-over-agg (bucket stats over doc counts) into independent
-# aggregations over the raw explode, so without a persist the corpus
-# is exploded once per consumer (3×). The persist is the production
-# shape: one explode, everything else derives from the cached counts.
-# Keyed like the dedup-family caches; bench releases between reps.
-_DSIR_DOCB_CACHE: dict = {}
-
-
-def release_dsir(spark=None) -> int:
-    """Unpersist the DSIR count cache (the release_semantic
-    discipline) — bench calls this between reps so they time the
-    plan, not the campaign cache."""
-    released = 0
-    for key in list(_DSIR_DOCB_CACHE):
-        if spark is not None and key[0] != spark.sparkContext.applicationId:
-            continue
-        _DSIR_DOCB_CACHE.pop(key).unpersist()
-        released += 1
-    return released
-
-
 def text_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR importance weight per document: hashed unigram+bigram
     features, two bag-of-buckets n-gram models (target = the 'en'
@@ -1630,9 +1592,9 @@ def text_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     exposure is one ulp on a value pre-rounded to 6 decimals.
 
     Scale shape: the corpus-token-sized explode feeds EXACTLY ONE
-    shuffle — the per-(doc, bucket) counts, persisted behind the
-    campaign cache seam (Catalyst collapses the agg-over-agg, so
-    without the persist every consumer re-runs the explode). The
+    shuffle — the per-(doc, bucket) counts, persisted in the campaign
+    cache under the tag ``dsir`` (Catalyst collapses the agg-over-agg,
+    so without the persist every consumer re-runs the explode). The
     bucket stats are a ≤4096-group re-agg of the cached counts,
     totals a 1-row broadcast, and the 4096-row LLR model broadcasts
     back onto the same cached counts (plan-pinned: all three
@@ -1687,24 +1649,27 @@ def _dsir_buckets(df: DataFrame, carry: list[str]) -> DataFrame:
 def _dsir_docb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ONE corpus-wide shuffle of the DSIR pass: per-(doc, bucket)
     feature counts with lang riding along (functionally dependent on
-    doc_id, so no later corpus scan is needed). Persisted behind the
-    campaign seam: the bucket stats and the scoring join both read
-    these counts, and Catalyst would otherwise re-run the explode per
-    consumer."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    docb = _DSIR_DOCB_CACHE.get(key)
-    if docb is None:
+    doc_id, so no later corpus scan is needed). Persisted under the
+    campaign tag ``dsir``: the bucket stats and the scoring join both
+    read these counts, and Catalyst collapses the agg-over-agg into
+    independent aggregations over the raw explode, so without the
+    persist the corpus is exploded once per consumer. The persist is
+    the production shape: one explode, everything else derives from
+    the cached counts. The DSIR queries declare the tag cold
+    (``operators.COLD_TAGS``) so their timed reps measure the plan."""
+
+    def build() -> DataFrame:
         from pyspark import StorageLevel
 
         docs = load_table(spark, sf_dir, "documents", rebalance=True)
-        docb = (
+        return (
             _dsir_buckets(docs, ["lang"])
             .groupBy("doc_id", "lang", "b")
             .agg(F.count(F.lit(1)).alias("c"))
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        _DSIR_DOCB_CACHE[key] = docb
-    return docb
+
+    return campaign(spark, "dsir", sf_dir, build)
 
 
 def dsir_llr_model(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -92,9 +92,14 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def local_cpus() -> str:
+    """Cores of the local session: $SPARK_GRAFT_CPUS, default 32."""
+    return os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+
 def get_spark(app_name: str = "mqtt-influx-spark") -> SparkSession:
     """Build a local session (tests / bench). local[$SPARK_GRAFT_CPUS]."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -51,9 +51,9 @@ def start_near_dup_screen(
     (new_doc_id, corpus_doc_id, jaccard, batch_id) to
     ``out_dir/near_dup_hits``.
 
-    The corpus shingle + band index builds once (persisted via the
-    dedup module's keyed caches — release with
-    ``operators.dedup.release_shingles`` when the campaign ends); each
+    The corpus shingle + band index builds once (persisted in the
+    campaign cache under the tag ``shingles`` — release with
+    ``cache.release`` when the campaign ends); each
     micro-batch pays only its own shingling plus collision-bounded
     joins.
     """
@@ -98,8 +98,8 @@ def start_substring_screen(
     MinHash bands.
 
     Same foreachBatch rationale as the near-dup screen: the corpus
-    index is campaign-static (built once, persisted, released via
-    ``operators.dedup.release_shingles``), each batch is an
+    index is campaign-static (built once, persisted in the campaign
+    cache under the tag ``window_index``), each batch is an
     independent bounded probe join, exactly-once via checkpoint +
     batch-id idempotence. The batch and the index share one hash
     kernel (the corpus-size gate), pinned here once so a corpus that
@@ -149,7 +149,8 @@ def start_dsir_screen(
 
     Same foreachBatch rationale as the other screens: the model is
     campaign-static (DSIR_BUCKETS rows, broadcast per batch; the
-    underlying counts persist behind ``textops.release_dsir``), each
+    underlying counts persist in the campaign cache under the tag
+    ``dsir``), each
     micro-batch is an independent bounded score join, exactly-once
     via checkpoint + batch-id idempotence. The batch and the model
     share one bucket kernel (``textops._dsir_buckets``), so an

@@ -21,3 +21,15 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF0001
+
+
+@pytest.fixture
+def owned(spark):
+    """``owned(tag)``: this session's campaign-cache entries under one
+    tag, as {key: value}."""
+    from mqtt_influx_storage_service_spark import cache
+
+    app = spark.sparkContext.applicationId
+    return lambda tag: {
+        k[2]: v for k, v in cache._ENTRIES.items() if k[:2] == (app, tag)
+    }

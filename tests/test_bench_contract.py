@@ -37,10 +37,10 @@ def test_emit_stays_inside_tail_budget_and_parses(tmp_path, monkeypatch, capsys)
         parsed = json.loads(line)
         assert parsed["value"] == 1.0 and parsed["n_queries"] == n
         # full payload always lands in the detail file
-        detail = json.load(open(tmp_path / "BENCH_DETAIL.json"))
+        detail = json.load(open(tmp_path / bench._detail_file()))
         assert len(detail["queries"]) == n
         if len(parsed["queries"]) < n:
-            assert parsed["queries_file"] == "BENCH_DETAIL.json"
+            assert parsed["queries_file"] == bench._detail_file()
             assert parsed["queries_omitted"] == n - len(parsed["queries"])
             # elision keeps the SLOWEST queries — the grading signal
             kept = set(parsed["queries"])
@@ -99,9 +99,25 @@ def test_emit_keeps_ten_slowest_inline_over_prose(tmp_path, monkeypatch, capsys)
     # the inline survivors are the slowest — the grading signal
     assert set(slowest[: len(parsed["queries"])]) == set(parsed["queries"])
     # the full prose still lives in the detail file, untouched
-    detail = json.load(open(tmp_path / "BENCH_DETAIL.json"))
+    detail = json.load(open(tmp_path / bench._detail_file()))
     assert detail["contention_gate"]["diagnosis"] == "d" * 500
     assert all("note" in v for v in detail["top_decile_variance"].values())
+
+
+def test_emit_names_detail_file_by_core_count(tmp_path, monkeypatch, capsys):
+    """A low-core probe (SPARK_GRAFT_CPUS=8) must not overwrite the main
+    run's BENCH_DETAIL.json; every payload stamps its core count."""
+    monkeypatch.setattr(bench, "_REPO", str(tmp_path))
+    for cpus, name in (("32", "BENCH_DETAIL.json"), ("8", "BENCH_DETAIL_c8.json")):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", cpus)
+        bench._emit({"value": 1.0, "queries": _fake_queries(400), "failed": []})
+        parsed = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert parsed["cpus"] == int(cpus)
+        assert parsed["queries_file"] == name
+        assert json.load(open(tmp_path / name))["cpus"] == int(cpus)
+    assert sorted(p.name for p in tmp_path.iterdir()) == [
+        "BENCH_DETAIL.json", "BENCH_DETAIL_c8.json",
+    ]
 
 
 def test_prior_round_ratio_skips_scaling_probe_artifacts(tmp_path, monkeypatch):
@@ -124,22 +140,40 @@ def test_prior_round_ratio_skips_scaling_probe_artifacts(tmp_path, monkeypatch):
     assert r["common_ratio"] == 0.5
 
 
-def test_one_rep_release_discipline_covers_r14_persists():
+def test_one_rep_release_discipline_covers_r14_persists(spark, sf_dir, owned):
     """VERDICT r14 #2: text_bm25 / sim_hybrid_rrf memoize the pruned tf
     relation and the pipeline campaign trio memoizes the curated
     survivor set — min-of-2 without a per-rep release publishes
-    warm-cache floors. Pin the release list in bench's source (the
-    closure itself needs a live session to exercise)."""
-    import inspect
+    warm-cache floors. The cold declaration must give them those tags,
+    and the per-rep ``release_for`` must free exactly those tags while
+    the shared dedup-family caches stay resident."""
+    from mqtt_influx_storage_service_spark import cache
+    from mqtt_influx_storage_service_spark.operators import COLD_TAGS, all_queries
 
-    src = inspect.getsource(bench._run_suite)
-    assert "release_bm25" in src
+    qs = all_queries()
+    assert set(COLD_TAGS) <= set(qs)
     for q in ("text_bm25", "sim_hybrid_rrf"):
-        assert q in src
-    assert "release_curated" in src
+        assert "bm25" in COLD_TAGS[q]
     for q in ("pipeline_training_mix", "pipeline_token_budget",
               "pipeline_epochs"):
-        assert q in src
+        assert "curated" in COLD_TAGS[q]
+
+    cache.release(spark)
+    try:
+        for q in ("text_bm25", "pipeline_training_mix"):
+            qs[q](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        assert owned("bm25") and owned("curated") and owned("labels")
+        assert cache.release_for(spark, "sim_hybrid_rrf") == 1
+        assert not owned("bm25")
+        assert owned("curated") and owned("labels")
+        assert cache.release_for(spark, "pipeline_epochs") == 1
+        assert not owned("curated")
+        assert owned("labels")
+        # a query without a cold declaration releases nothing
+        assert cache.release_for(spark, "dedup_components") == 0
+        assert owned("labels")
+    finally:
+        cache.release(spark)
 
 
 def test_prior_round_ratio_uses_newest_parsed_round(tmp_path, monkeypatch):

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from mqtt_influx_storage_service_spark import plans
+from mqtt_influx_storage_service_spark import cache, plans
 from mqtt_influx_storage_service_spark.operators import all_queries
 from mqtt_influx_storage_service_spark.operators.pipeline import (
     PACK_BUCKET,
@@ -500,11 +500,7 @@ def test_dsir_counts_materialize_once(spark):
     bucket stats and the scoring join; corpus totals ride a global
     window over the bounded bstats relation instead of re-aggregating
     the cache a third time."""
-    from mqtt_influx_storage_service_spark.operators.textops import (
-        release_dsir,
-    )
-
-    release_dsir(spark)
+    cache.release(spark, "dsir")
     try:
         df = all_queries()["text_dsir_importance"](spark, SF)
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -514,7 +510,7 @@ def test_dsir_counts_materialize_once(spark):
         outside = plan.split("InMemoryRelation")[0]
         assert "Generate" not in outside
     finally:
-        assert release_dsir(spark) == 1
+        assert cache.release(spark, "dsir") == 1
 
 
 def test_funnel_chains_and_matches_gate_view(spark, sf_dir):
@@ -543,28 +539,21 @@ def test_funnel_chains_and_matches_gate_view(spark, sf_dir):
     assert rows[-1].tokens_out == sum(g.n_tokens for g in kept)
 
 
-def test_curated_docs_materialize_once_and_release(spark):
+def test_curated_docs_materialize_once_and_release(spark, owned):
     """The three selection queries (training_mix / token_budget /
     epochs) share ONE persisted curated-survivors relation per
     campaign: the second consumer's plan reads the cache
     (InMemoryTableScan of the survivors), results are identical to a
-    fresh recompute, and release_shingles frees the entry (r14)."""
-    from mqtt_influx_storage_service_spark.operators.dedup import (
-        release_shingles,
-    )
-    from mqtt_influx_storage_service_spark.operators.pipeline import (
-        _CURATED_CACHE,
-        _curated_docs,
-    )
+    fresh recompute, and the campaign teardown frees the entry (r14)."""
+    from mqtt_influx_storage_service_spark.operators.pipeline import _curated_docs
 
-    release_shingles(spark)
+    cache.release(spark)
     try:
         fresh = all_queries()["pipeline_training_mix"](spark, SF)
         fresh_rows = sorted(map(tuple, fresh.collect()))
-        key = (spark.sparkContext.applicationId, SF)
-        assert key in _CURATED_CACHE
+        assert SF in owned("curated")
         # same handle on the second call — no rebuilt subtree
-        assert _curated_docs(spark, SF) is _CURATED_CACHE[key]
+        assert _curated_docs(spark, SF) is owned("curated")[SF]
         # a second consumer's plan rides the persisted relation
         again = all_queries()["pipeline_token_budget"](spark, SF)
         plan = again._jdf.queryExecution().executedPlan().toString()
@@ -575,37 +564,29 @@ def test_curated_docs_materialize_once_and_release(spark):
         )
         assert warm_rows == fresh_rows
     finally:
-        release_shingles(spark)
-        assert key not in _CURATED_CACHE
+        cache.release(spark)
+        assert SF not in owned("curated")
 
 
-def test_release_curated_frees_only_the_curated_cache(spark):
+def test_release_curated_frees_only_the_curated_cache(spark, owned):
     """r15 (VERDICT r14 #2): the bench releases the curated-survivors
     persist between training_mix/token_budget/epochs reps so the
-    published floors are cold-plan times. release_curated must free
-    exactly the curated entry — not the dedup campaign caches the
-    suite deliberately keeps warm."""
-    from mqtt_influx_storage_service_spark.operators.dedup import (
-        _LABEL_CACHE,
-        release_shingles,
-    )
-    from mqtt_influx_storage_service_spark.operators.pipeline import (
-        _CURATED_CACHE,
-        _curated_docs,
-        release_curated,
-    )
+    published floors are cold-plan times. Releasing the ``curated`` tag
+    must free exactly the curated entry — not the dedup campaign caches
+    the suite deliberately keeps warm."""
+    from mqtt_influx_storage_service_spark.operators.pipeline import _curated_docs
 
-    release_shingles(spark)
+    cache.release(spark)
     try:
         _curated_docs(spark, SF)
-        key = (spark.sparkContext.applicationId, SF)
-        assert key in _CURATED_CACHE
-        labels_before = dict(_LABEL_CACHE)
-        assert release_curated(spark) == 1
-        assert key not in _CURATED_CACHE
+        assert SF in owned("curated")
+        labels_before = owned("labels")
+        assert labels_before  # the survivors read the component labels
+        assert cache.release(spark, "curated") == 1
+        assert SF not in owned("curated")
         # the component-label campaign cache is untouched
-        assert dict(_LABEL_CACHE) == labels_before
+        assert owned("labels") == labels_before
         # idempotent: nothing left to release
-        assert release_curated(spark) == 0
+        assert cache.release(spark, "curated") == 0
     finally:
-        release_shingles(spark)
+        cache.release(spark)

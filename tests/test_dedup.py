@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+from mqtt_influx_storage_service_spark import cache
 from mqtt_influx_storage_service_spark.operators.dedup import (
     dedup_exact,
     dedup_minhash_lsh,
@@ -65,7 +66,6 @@ def test_hot_bucket_cap_bounds_candidates(spark, tmp_path):
         LSH_BUCKET_CAP,
         dedup_minhash_lsh,
         lsh_hot_buckets,
-        release_shingles,
     )
 
     boiler = " ".join(f"boiler{i}" for i in range(30))
@@ -90,7 +90,7 @@ def test_hot_bucket_cap_bounds_candidates(spark, tmp_path):
         assert len(pairs) == 2
         assert LSH_BUCKET_CAP < 120
     finally:
-        release_shingles(spark)
+        cache.release(spark)
 
 
 def test_shingle_df_cap_bounds_pair_stage_keeps_exactness(spark, tmp_path):
@@ -111,7 +111,6 @@ def test_shingle_df_cap_bounds_pair_stage_keeps_exactness(spark, tmp_path):
         SHINGLE_DF_CAP,
         dedup_ngram_jaccard,
         jaccard_hot_shingles,
-        release_shingles,
     )
 
     boiler = " ".join(f"boiler{i}" for i in range(40))
@@ -155,7 +154,7 @@ def test_shingle_df_cap_bounds_pair_stage_keeps_exactness(spark, tmp_path):
         ) and {got[p].jaccard for p in rescued} <= legal, sorted(rescued)[:5]
         assert SHINGLE_DF_CAP < 120
     finally:
-        release_shingles(spark)
+        cache.release(spark)
 
 
 def test_rescue_tier_cooc_gate(spark, tmp_path):
@@ -172,7 +171,6 @@ def test_rescue_tier_cooc_gate(spark, tmp_path):
         RESCUE_COOC_MIN,
         SHINGLE_DF_CAP,
         _shingle_candidates,
-        release_shingles,
     )
 
     assert RESCUE_COOC_MIN == 2  # the fixture encodes exactly this gate
@@ -198,7 +196,7 @@ def test_rescue_tier_cooc_gate(spark, tmp_path):
         cand = {(r.doc_a, r.doc_b) for r in _shingle_candidates(spark, sf).collect()}
         assert cand == {(0, 1)}, sorted(cand)[:10]
     finally:
-        release_shingles(spark)
+        cache.release(spark)
 
 
 def test_hot_shingle_audit_empty_on_fixtures(spark, sf_dir):
@@ -213,25 +211,18 @@ def test_hot_shingle_audit_empty_on_fixtures(spark, sf_dir):
     assert jaccard_hot_shingles(spark, sf_dir).count() == 0
 
 
-def test_release_shingles_unpersists(spark, sf_dir):
+def test_release_shingles_unpersists(spark, sf_dir, owned):
     """The shared shingle table is persisted once per (app, sf_dir) and
     must be releasable — a long-lived service can't pin executor memory
     forever."""
-    from mqtt_influx_storage_service_spark.operators.dedup import (
-        _SHINGLE_CACHE,
-        release_shingles,
-    )
-
     dedup_ngram_jaccard(spark, sf_dir).collect()  # materializes the cache
-    assert len(_SHINGLE_CACHE) >= 1
+    assert len(owned("shingles")) >= 1
     jsc = spark.sparkContext._jsc
     before = jsc.getPersistentRDDs().size()
-    released = release_shingles(spark)
+    released = cache.release(spark, "shingles")
     assert released >= 1
     assert jsc.getPersistentRDDs().size() <= before - released
-    assert not any(
-        k[0] == spark.sparkContext.applicationId for k in _SHINGLE_CACHE
-    )
+    assert not owned("shingles")
 
 
 def test_components_fixpoint_and_semantics(spark, sf_dir):
@@ -273,7 +264,7 @@ def test_components_fixpoint_and_semantics(spark, sf_dir):
     # near-dup pairs land in the same component
     for r in dd.dedup_ngram_jaccard(spark, sf_dir).collect():
         assert base[r.doc_a].component_id == base[r.doc_b].component_id
-    dd.release_shingles(spark)
+    cache.release(spark)
 
 
 def test_passage_dedup_exact_duplicates_fully_flagged(spark, sf_dir):
@@ -305,7 +296,6 @@ def test_edge_cap_preserves_dense_group_components(spark, tmp_path):
         EDGE_CAP,
         component_edge_trim,
         dedup_components,
-        release_shingles,
     )
 
     base = [f"w{i}" for i in range(40)]
@@ -328,7 +318,7 @@ def test_edge_cap_preserves_dense_group_components(spark, tmp_path):
         assert {comp[v] for v in range(30)} == {0}
         assert comp[100] == comp[101] == 100
     finally:
-        release_shingles(spark)
+        cache.release(spark)
 
 
 def test_edge_trim_audit_empty_on_fixtures(spark, sf_dir):
@@ -345,7 +335,6 @@ def test_containment_detects_quotes_jaccard_misses(spark, tmp_path):
     from mqtt_influx_storage_service_spark.operators.dedup import (
         dedup_containment,
         dedup_ngram_jaccard,
-        release_shingles,
     )
 
     quote = " ".join(f"q{i}" for i in range(20))
@@ -370,7 +359,7 @@ def test_containment_detects_quotes_jaccard_misses(spark, tmp_path):
         jac = {(r.doc_a, r.doc_b) for r in dedup_ngram_jaccard(spark, sf).collect()}
         assert (1, 2) not in jac  # symmetric Jaccard is diluted below 0.5
     finally:
-        release_shingles(spark)
+        cache.release(spark)
 
 
 def test_substring_dedup_span_semantics(spark, tmp_path):
@@ -642,18 +631,18 @@ def test_semantic_gate_switches_to_ivf(spark, sf_dir, monkeypatch):
 
 def test_semantic_assigned_is_cached_and_released(spark, sf_dir):
     """The assignment relation persists once per (app, sf_dir) under
-    the dedup-family cache seam and release_shingles drops it."""
+    the campaign tag ``semantic`` and the campaign teardown drops it."""
     from mqtt_influx_storage_service_spark.operators import dedup as D
 
-    D.release_shingles(spark)
+    cache.release(spark)
     a = D._semantic_assigned(spark, sf_dir)
     b = D._semantic_assigned(spark, sf_dir)
     assert a is b
     assert a.storageLevel.useMemory
-    assert D.release_shingles(spark) >= 1
+    assert cache.release(spark) >= 1
     c = D._semantic_assigned(spark, sf_dir)
     assert c is not a
-    D.release_shingles(spark)
+    cache.release(spark)
 
 
 def test_semdedup_ivf_kernel_above_gate_matches_within_cluster_rule(
@@ -715,7 +704,7 @@ def test_semdedup_ivf_kernel_above_gate_matches_within_cluster_rule(
     assert sum(1 for _, _, kept in got.values() if not kept) > 0
 
 
-def test_grid_verify_equals_plain_verify(spark, sf_dir, monkeypatch):
+def test_grid_verify_equals_plain_verify(spark, sf_dir, monkeypatch, owned):
     """VERDICT r12 #4: above the gate + at high measured candidate
     multiplicity, _verify_joined swaps the per-pair verify (arrays
     shipped once per PAIR — a measured 6.2 GB exchange at the 100x
@@ -736,7 +725,7 @@ def test_grid_verify_equals_plain_verify(spark, sf_dir, monkeypatch):
     # otherwise take the exact-count fork, bypassing the grid — which
     # is correct behavior, but not what this test pins)
     monkeypatch.setattr(DD, "_corpus_has_overcap", lambda *_: True)
-    DD.release_shingles(spark)
+    cache.release(spark)
     try:
         grid_j = sorted(
             map(tuple, DD.dedup_ngram_jaccard(spark, sf_dir).collect())
@@ -745,15 +734,15 @@ def test_grid_verify_equals_plain_verify(spark, sf_dir, monkeypatch):
             map(tuple, DD.dedup_minhash_lsh(spark, sf_dir).collect())
         )
         # the campaign cache holds one persisted candidate set per tag
-        tags = sorted(k[2] for k in DD._CAND_CACHE)
+        tags = sorted(tag for _, tag in owned("candidates"))
         assert tags == ["banded", "shingle"]
     finally:
-        DD.release_shingles(spark)
+        cache.release(spark)
     assert grid_j == plain_j and len(plain_j) > 0
     assert grid_m == plain_m and len(plain_m) > 0
 
 
-def test_exact_count_fork_matches_array_verify(spark, sf_dir, monkeypatch):
+def test_exact_count_fork_matches_array_verify(spark, sf_dir, monkeypatch, owned):
     """r15: on corpora with no over-cap shingle the candidate stage's
     co-occurrence count IS |A ∩ B| (every bucket complete), so jaccard
     and containment skip the array-verify join entirely. Pins (a) the
@@ -764,12 +753,11 @@ def test_exact_count_fork_matches_array_verify(spark, sf_dir, monkeypatch):
     released with the campaign caches."""
     from mqtt_influx_storage_service_spark.operators import dedup as DD
 
-    DD.release_shingles(spark)
+    cache.release(spark)
     try:
         # (c) statistic: clean fixture -> False, memoized
-        key = (spark.sparkContext.applicationId, sf_dir)
         assert DD._corpus_has_overcap(spark, sf_dir) is False
-        assert DD._OVERCAP_CACHE[key] is False
+        assert owned("overcap")[sf_dir] is False
         # (a) fork plan: no SortMergeJoin / array_intersect / grid
         fast_j = DD.dedup_ngram_jaccard(spark, sf_dir)
         plan = fast_j._jdf.queryExecution().executedPlan().toString()
@@ -792,8 +780,8 @@ def test_exact_count_fork_matches_array_verify(spark, sf_dir, monkeypatch):
         assert fast_cont == slow_cont and len(fast_cont) > 0
     finally:
         monkeypatch.undo()
-        DD.release_shingles(spark)
-        assert key not in DD._OVERCAP_CACHE  # released with the campaign
+        cache.release(spark)
+        assert sf_dir not in owned("overcap")  # released with the campaign
 
 
 def test_corpus_has_overcap_true_on_boilerplate(spark, tmp_path):
@@ -817,7 +805,7 @@ def test_corpus_has_overcap_true_on_boilerplate(spark, tmp_path):
         )
         assert "array_intersect" in plan
     finally:
-        DD.release_shingles(spark)
+        cache.release(spark)
 
 
 def test_grid_cell_map_places_one_cell_per_partition(spark):
@@ -847,7 +835,7 @@ def test_grid_cell_map_places_one_cell_per_partition(spark):
         assert DD._grid_cell_map(spark, n) is m  # memoized, no re-search
 
 
-def test_grid_verify_gates(spark, sf_dir, monkeypatch):
+def test_grid_verify_gates(spark, sf_dir, monkeypatch, owned):
     """Below VERIFY_GRID_GATE nothing changes: no candidate persist, no
     count job, plain per-pair plan (the fixture/bench scales). Above
     the gate but below VERIFY_GRID_MIN_MULT (the realistic low-dup-rate
@@ -856,27 +844,27 @@ def test_grid_verify_gates(spark, sf_dir, monkeypatch):
     candidate set."""
     from mqtt_influx_storage_service_spark.operators import dedup as DD
 
-    DD.release_shingles(spark)
+    cache.release(spark)
     # r15: pin the legacy path (the clean fixture would otherwise take
     # the exact-count fork, which has no grid machinery to gate)
     monkeypatch.setattr(DD, "_corpus_has_overcap", lambda *_: True)
     df = DD.dedup_ngram_jaccard(spark, sf_dir)
-    assert not DD._CAND_CACHE  # below gate: construction ran no job
+    assert not owned("candidates")  # below gate: construction ran no job
     assert "pmod(xxhash64(doc_a" not in df._jdf.queryExecution().toString()
 
     # above gate, low multiplicity: persisted + counted, still per-pair
     monkeypatch.setattr(DD, "VERIFY_GRID_GATE", 10)
     monkeypatch.setattr(DD, "VERIFY_GRID_MIN_MULT", 10**9)
-    DD.release_shingles(spark)
+    cache.release(spark)
     try:
         df2 = DD.dedup_ngram_jaccard(spark, sf_dir)
-        key = next(iter(DD._CAND_COUNT))
-        assert DD._CAND_COUNT[key] > 0
+        _, n_pairs = next(iter(owned("candidates").values()))
+        assert n_pairs > 0
         plan2 = df2._jdf.queryExecution().toString()
         assert "pmod(xxhash64(doc_a" not in plan2
     finally:
-        DD.release_shingles(spark)
-    assert not DD._CAND_CACHE and not DD._CAND_COUNT
+        cache.release(spark)
+    assert not owned("candidates")
 
 
 def test_below_band_escape_threads_through_composed_callers(

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pytest
 
+from mqtt_influx_storage_service_spark import cache
 from mqtt_influx_storage_service_spark.operators import dedup, mlops, similarity
 
 
@@ -209,17 +210,16 @@ def test_ivf_training_cache_is_transparent(spark, sf_dir):
     from mqtt_influx_storage_service_spark.operators.mlops import (
         _ivf_train,
         _unit_vectors,
-        release_ivf_training,
     )
     from mqtt_influx_storage_service_spark.sources.tables import table_row_count
 
     unit = _unit_vectors(spark, sf_dir)
     n = table_row_count(sf_dir, "embeddings")
-    release_ivf_training(spark)
+    cache.release(spark, "ivf_train")
     c1, s1 = _ivf_train(unit, n, cache_key=sf_dir)
     c2, s2 = _ivf_train(unit, n, cache_key=sf_dir)   # memoized
     assert c1 is c2 and s1 is s2
-    assert release_ivf_training(spark) == 1
+    assert cache.release(spark, "ivf_train") == 1
     c3, _ = _ivf_train(unit, n, cache_key=sf_dir)    # fresh fit
     assert c3 is not c1
     assert np.array_equal(c1, c3)

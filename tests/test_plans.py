@@ -9,7 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from mqtt_influx_storage_service_spark import plans
+from mqtt_influx_storage_service_spark import cache, plans
 from mqtt_influx_storage_service_spark.operators import all_queries
 
 SF = "/root/testdata/sf0.001"
@@ -131,8 +131,6 @@ def test_pipeline_labels_attach_is_shuffle_hash_not_broadcast(spark):
     class. One corpus shuffle on doc_id is the honest price of a
     per-doc label lookup; the build side stays per-partition-bounded
     at any scale."""
-    from mqtt_influx_storage_service_spark.operators.dedup import release_shingles
-
     df = all_queries()["pipeline_training_mix"](spark, SF)
     try:
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -144,7 +142,7 @@ def test_pipeline_labels_attach_is_shuffle_hash_not_broadcast(spark):
         assert "BroadcastHashJoin" not in lo, plan
         assert not plans.has_cartesian(df)
     finally:
-        release_shingles(spark)
+        cache.release(spark)
 
 
 def test_pack_sequences_windows_are_bounded(spark):
@@ -187,8 +185,6 @@ def test_components_assignment_shuffle_hash_no_corpus_broadcast(spark):
     plan must carry the shuffled hash joins and NO BroadcastExchange
     anywhere (the propagation subtree only touches candidate-pair-
     sized tables through shuffles)."""
-    from mqtt_influx_storage_service_spark.operators.dedup import release_shingles
-
     df = all_queries()["dedup_components"](spark, SF)
     try:
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -199,7 +195,7 @@ def test_components_assignment_shuffle_hash_no_corpus_broadcast(spark):
         assert plan.count("ShuffledHashJoin") >= 2, plan
         assert "BroadcastHashJoin" not in _left_outer_lines(plan), plan
     finally:
-        release_shingles(spark)
+        cache.release(spark)
 
 
 def _left_outer_lines(plan: str) -> str:
@@ -262,7 +258,6 @@ def test_dup_edge_plan_single_trim_window_no_subtree_duplication(spark, sf_dir):
     exact-dup rep window + the trim window."""
     from mqtt_influx_storage_service_spark.operators.dedup import (
         _dup_edges,
-        release_shingles,
     )
 
     try:
@@ -277,7 +272,7 @@ def test_dup_edge_plan_single_trim_window_no_subtree_duplication(spark, sf_dir):
         # formulation measured 4 copies / 6 Window nodes here.)
         assert plan.count("explode(shingles") == 1, plan
     finally:
-        release_shingles(spark)
+        cache.release(spark)
 
 
 def test_shingle_candidate_plan_group_limit_two_exchanges(spark, sf_dir):
@@ -296,7 +291,6 @@ def test_shingle_candidate_plan_group_limit_two_exchanges(spark, sf_dir):
       ride a static broadcast — the r9 census class)."""
     from mqtt_influx_storage_service_spark.operators.dedup import (
         _shingle_candidates,
-        release_shingles,
     )
 
     try:
@@ -310,7 +304,7 @@ def test_shingle_candidate_plan_group_limit_two_exchanges(spark, sf_dir):
         # map-side partial gate aggregation before the pair exchange
         assert "partial_max(under_cap" in plan, plan
     finally:
-        release_shingles(spark)
+        cache.release(spark)
 
 
 def test_bucketed_join_eliminates_the_shuffle(spark, tmp_path, sf_dir):

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import math
 
+from mqtt_influx_storage_service_spark import cache
 from mqtt_influx_storage_service_spark.operators.similarity import (
     RRF_K,
     RRF_POOL,
@@ -170,13 +171,12 @@ def test_mmr_kernel_matches_unrolled_reference(spark, sf_dir):
         MMR_POOL,
         _dot,
         _with_norm,
-        release_mmr,
         sim_mmr,
     )
 
-    release_mmr(spark)
+    cache.release(spark, "mmr")
     got = sim_mmr(spark, sf_dir).toPandas()
-    release_mmr(spark)
+    cache.release(spark, "mmr")
 
     # --- r13 reference formulation (unrolled lazy argmax) ---
     emb = load_table(spark, sf_dir, "embeddings", rebalance=True)
@@ -260,31 +260,25 @@ def test_mmr_kernel_matches_unrolled_reference(spark, sf_dir):
         assert list(got[col]) == list(ref[col]), col
 
 
-def test_bm25_tf_cache_shared_and_released(spark, sf_dir):
+def test_bm25_tf_cache_shared_and_released(spark, sf_dir, owned):
     """r14: the vocabulary-pruned tf relation persists ONCE per
     campaign and is shared by text_bm25 and sim_hybrid_rrf (each
     consumer re-tokenized the corpus before); the release seam must
     drop it so re-runs time the plan, and cached vs fresh results must
     be identical."""
-    from mqtt_influx_storage_service_spark.operators import textops
-
-    textops.release_bm25(spark)
+    cache.release(spark, "bm25")
     first = text_bm25(spark, sf_dir).toPandas()
-    n_keys = len(textops._BM25_TF_CACHE)
+    n_keys = len(owned("bm25"))
     assert n_keys >= 1
     sim_hybrid_rrf(spark, sf_dir).write.format("noop").mode(
         "overwrite"
     ).save()
     # the hybrid retriever reuses the SAME cached tf — no new key
-    assert len(textops._BM25_TF_CACHE) == n_keys
+    assert len(owned("bm25")) == n_keys
     again = text_bm25(spark, sf_dir).toPandas()
     key_cols = ["query_id", "doc_id"]
     assert first.sort_values(key_cols).reset_index(drop=True).equals(
         again.sort_values(key_cols).reset_index(drop=True)
     )
-    assert textops.release_bm25(spark) >= 1
-    assert not [
-        k
-        for k in textops._BM25_TF_CACHE
-        if k[0] == spark.sparkContext.applicationId
-    ]
+    assert cache.release(spark, "bm25") >= 1
+    assert not owned("bm25")

@@ -11,6 +11,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from mqtt_influx_storage_service_spark import cache
 from mqtt_influx_storage_service_spark import streaming as st
 
 
@@ -467,7 +468,6 @@ def test_near_dup_screen_stream_matches_batch(spark, tmp_path):
         _doc_shingles,
         _minhash_banded,
         near_dup_screen,
-        release_shingles,
     )
     from mqtt_influx_storage_service_spark.sources import load_table
 
@@ -504,7 +504,7 @@ def test_near_dup_screen_stream_matches_batch(spark, tmp_path):
     )
     assert {(r.new_doc_id, r.corpus_doc_id, r.jaccard)
             for r in batch.collect()} == got
-    release_shingles(spark)
+    cache.release(spark)
 
 
 def test_substring_screen_stream_matches_batch(spark, tmp_path):
@@ -517,7 +517,6 @@ def test_substring_screen_stream_matches_batch(spark, tmp_path):
         SUBSTR_TOKENS,
         _corpus_window_index,
         _substring_kernel,
-        release_shingles,
         substring_screen,
     )
     from mqtt_influx_storage_service_spark.sources import load_table
@@ -567,7 +566,7 @@ def test_substring_screen_stream_matches_batch(spark, tmp_path):
     assert {
         (r.new_doc_id, r.span_start, r.span_len) for r in batch.collect()
     } == got
-    release_shingles(spark)
+    cache.release(spark)
 
 
 def test_socket_source_drives_ingest(spark, tmp_path):
@@ -1065,7 +1064,6 @@ def test_dsir_screen_stream_equals_batch(spark, tmp_path):
     from mqtt_influx_storage_service_spark.operators.textops import (
         dsir_llr_model,
         dsir_score,
-        release_dsir,
     )
     from mqtt_influx_storage_service_spark.sources import load_table
 
@@ -1098,17 +1096,13 @@ def test_dsir_screen_stream_equals_batch(spark, tmp_path):
     assert got == want and len(got) == 2
     scores = {d: w for d, _, w in got}
     assert scores[400001] > scores[400002]
-    release_dsir(spark)
+    cache.release(spark, "dsir")
 
 
 def test_dsir_screen_restart_is_exactly_once(spark, tmp_path):
     """Kill/restart chaos for the DSIR screen: after a second start on
     the same checkpoint, already-screened batches are not re-scored
     (no duplicate doc_ids in the score log), and the late batch is."""
-    from mqtt_influx_storage_service_spark.operators.textops import (
-        release_dsir,
-    )
-
     sf = "/root/testdata/sf0.001"
     src = str(tmp_path / "src")
     spark.createDataFrame(
@@ -1131,7 +1125,7 @@ def test_dsir_screen_restart_is_exactly_once(spark, tmp_path):
     rows = spark.read.parquet(str(tmp_path / "out" / "dsir_scores")).collect()
     ids = sorted(r.doc_id for r in rows)
     assert ids == [500001, 500002]  # each exactly once across restarts
-    release_dsir(spark)
+    cache.release(spark, "dsir")
 
 
 def test_wide_view_refuses_case_pair_collision(spark):

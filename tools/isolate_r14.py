@@ -22,30 +22,6 @@ sys.path.insert(0, "/root/repo")
 PLANS_DIR = "/root/repo/plans/r14"
 
 
-def _release(spark, name: str, cold: bool = False) -> None:
-    """Same cache-release discipline as bench.py so reps time the plan.
-
-    With ``cold=True`` additionally drops the shared shingle/edge/label
-    caches (bench keeps those warm across the suite, so default-warm
-    numbers are the bench-comparable ones)."""
-    from mqtt_influx_storage_service_spark.operators.dedup import (
-        release_semantic,
-        release_shingles,
-    )
-    from mqtt_influx_storage_service_spark.operators.similarity import release_mmr
-
-    if name == "sim_mmr":
-        release_mmr(spark)
-    if name in ("dedup_semantic", "dedup_semantic_ivf"):
-        release_semantic(spark)
-    if name in ("text_dsir_importance", "pipeline_dsir_resample"):
-        from mqtt_influx_storage_service_spark.operators.textops import release_dsir
-
-        release_dsir(spark)
-    if cold and name.startswith(("dedup_", "pipeline_")):
-        release_shingles(spark)
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
@@ -57,6 +33,7 @@ def main() -> int:
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     args = ap.parse_args()
 
+    from mqtt_influx_storage_service_spark.cache import release, release_for
     from mqtt_influx_storage_service_spark.operators import all_queries
     from mqtt_influx_storage_service_spark.session import get_spark
 
@@ -76,7 +53,12 @@ def main() -> int:
             continue
         cons, execs = [], []
         for rep in range(args.reps):
-            _release(spark, name, cold=args.cold)
+            # bench's per-query cold discipline; --cold drops the whole
+            # campaign cache (bench keeps the shared dedup caches warm)
+            if args.cold:
+                release(spark)
+            else:
+                release_for(spark, name)
             spark.sparkContext.setJobDescription(f"iso:{name}:rep{rep}")
             t0 = time.time()
             df = qs[name](spark, args.sf)

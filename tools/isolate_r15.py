@@ -3,9 +3,8 @@ one at a time (noop sink, guide §1.4), splitting CONSTRUCTION (Python
 plan-building) from EXECUTION wall, and dump .explain('formatted') to
 plans/r15/<query>_<tag>.txt so plan claims are checkable offline.
 
-Same protocol as tools/isolate_r14.py; the release discipline matches
-r15's bench (VERDICT r14 #2: bm25 tf + curated-survivors persists now
-released per rep, so isolated floors are cold-plan times too).
+Same protocol as tools/isolate_r14.py; each rep releases the query's
+declared cold tags (``cache.release_for``), exactly as bench.py does.
 
 Usage: python tools/isolate_r15.py [--tag before|after] [--reps N]
                                    [--no-plans] query [query ...]
@@ -26,40 +25,6 @@ sys.path.insert(0, "/root/repo")
 PLANS_DIR = "/root/repo/plans/r15"
 
 
-def _release(spark, name: str, cold: bool = False) -> None:
-    """Same cache-release discipline as bench.py so reps time the plan.
-
-    With ``cold=True`` additionally drops the shared shingle/edge/label
-    caches (bench keeps those warm across the suite, so default-warm
-    numbers are the bench-comparable ones)."""
-    from mqtt_influx_storage_service_spark.operators.dedup import (
-        release_semantic,
-        release_shingles,
-    )
-    from mqtt_influx_storage_service_spark.operators.pipeline import (
-        release_curated,
-    )
-    from mqtt_influx_storage_service_spark.operators.similarity import release_mmr
-    from mqtt_influx_storage_service_spark.operators.textops import (
-        release_bm25,
-        release_dsir,
-    )
-
-    if name == "sim_mmr":
-        release_mmr(spark)
-    if name in ("dedup_semantic", "dedup_semantic_ivf"):
-        release_semantic(spark)
-    if name in ("text_dsir_importance", "pipeline_dsir_resample"):
-        release_dsir(spark)
-    if name in ("text_bm25", "sim_hybrid_rrf"):
-        release_bm25(spark)
-    if name in ("pipeline_training_mix", "pipeline_token_budget",
-                "pipeline_epochs"):
-        release_curated(spark)
-    if cold and name.startswith(("dedup_", "pipeline_")):
-        release_shingles(spark)
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
@@ -71,6 +36,7 @@ def main() -> int:
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     args = ap.parse_args()
 
+    from mqtt_influx_storage_service_spark.cache import release, release_for
     from mqtt_influx_storage_service_spark.operators import all_queries
     from mqtt_influx_storage_service_spark.session import get_spark
 
@@ -90,7 +56,12 @@ def main() -> int:
             continue
         cons, execs = [], []
         for rep in range(args.reps):
-            _release(spark, name, cold=args.cold)
+            # bench's per-query cold discipline; --cold drops the whole
+            # campaign cache (bench keeps the shared dedup caches warm)
+            if args.cold:
+                release(spark)
+            else:
+                release_for(spark, name)
             spark.sparkContext.setJobDescription(f"iso:{name}:rep{rep}")
             t0 = time.time()
             df = qs[name](spark, args.sf)

@@ -49,10 +49,10 @@ def main() -> int:
     args = ap.parse_args()
     names = args.queries or DEFAULT
 
+    from mqtt_influx_storage_service_spark.cache import release_for
     from mqtt_influx_storage_service_spark.operators import all_queries
     from mqtt_influx_storage_service_spark.session import get_spark
     from tools import regimestamp
-    from tools.isolate_r15 import _release
 
     spark = get_spark("recheck_noise_r15")
     spark.sparkContext.setLogLevel("ERROR")
@@ -65,7 +65,7 @@ def main() -> int:
         for name in names:
             reps = []
             for rep in range(args.reps):
-                _release(spark, name)
+                release_for(spark, name)
                 spark.sparkContext.setJobDescription(f"recheck:{name}:{rep}")
                 t0 = time.time()
                 qs[name](spark, args.sf).write.format("noop").mode(

@@ -131,25 +131,13 @@ def gen(fanout: int, out_dir: str) -> None:
           f"at fanout {fanout}", flush=True)
 
 
-def release_all(spark) -> None:
-    from mqtt_influx_storage_service_spark.operators.dedup import (
-        release_semantic, release_shingles)
-    from mqtt_influx_storage_service_spark.operators.similarity import (
-        release_mmr)
-    from mqtt_influx_storage_service_spark.operators.textops import (
-        release_dsir)
-    release_shingles(spark)
-    release_semantic(spark)
-    release_mmr(spark)
-    release_dsir(spark)
-
-
 def main() -> int:
     dirs = {10: f"{BASE}/f10", 100: f"{BASE}/f100"}
     if "--skip-gen" not in sys.argv:
         for fanout, d in dirs.items():
             gen(fanout, d)
 
+    from mqtt_influx_storage_service_spark.cache import release
     from mqtt_influx_storage_service_spark.operators import all_queries
     from mqtt_influx_storage_service_spark.operators.dedup import (
         LSH_BUCKET_CAP, lsh_hot_buckets)
@@ -175,7 +163,7 @@ def main() -> int:
         for name in QUERIES:
             best = None
             for _ in range(2):
-                release_all(spark)  # no warm caches carry between reps
+                release(spark)  # no warm caches carry between reps
                 t0 = time.time()
                 try:
                     qs[name](spark, d).write.format("noop").mode(

@@ -53,7 +53,7 @@ def main() -> int:
         return 1
     from pyspark.sql import SparkSession
 
-    from mqtt_influx_storage_service_spark import plans
+    from mqtt_influx_storage_service_spark import cache, plans
     from mqtt_influx_storage_service_spark.operators import dedup as DD
     from mqtt_influx_storage_service_spark.session import tune
     from tools import regimestamp as RS
@@ -101,7 +101,10 @@ def main() -> int:
         spark.sparkContext.setJobDescription(None)
         time.sleep(4)
         sw = sum(s.get("shuffleWriteBytes") or 0 for s in _drain())
-        n_pairs = max(DD._CAND_COUNT.values(), default=None)
+        n_pairs = max(
+            (v[1] for k, v in cache._ENTRIES.items() if k[1] == "candidates"),
+            default=None,
+        )
         return {
             "wall_sec": wall,
             "shuffle_write_gb": round(sw / 1e9, 2),
@@ -111,18 +114,18 @@ def main() -> int:
         }
 
     def gate_check() -> dict:
-        DD.release_shingles(spark)
+        cache.release(spark)
         return {"dedup_ngram_jaccard": _run("dedup_ngram_jaccard")}
 
     def perpair_default() -> dict:
-        DD.release_shingles(spark)
+        cache.release(spark)
         out = {}
         for name in ("dedup_ngram_jaccard", "dedup_containment"):
             out[name] = _run(name)
         return out
 
     def forced() -> dict:
-        DD.release_shingles(spark)
+        cache.release(spark)
         out = {}
         for name in ("dedup_ngram_jaccard", "dedup_containment"):
             out[name] = _run(name)

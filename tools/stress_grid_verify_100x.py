@@ -79,6 +79,7 @@ def main() -> int:
         return 1
     from pyspark.sql import SparkSession
 
+    from mqtt_influx_storage_service_spark.cache import release
     from mqtt_influx_storage_service_spark.operators import dedup as DD
     from mqtt_influx_storage_service_spark.session import tune
 
@@ -112,7 +113,7 @@ def main() -> int:
         # cold campaign state per attempt: each attempt pays the full
         # standalone protocol cost (cache sharing WITHIN the attempt
         # stays, as in the census protocol)
-        DD.release_shingles(spark)
+        release(spark)
         sec: dict = {
             "corpus": f"{D} (500k docs)",
             "protocol": "census protocol (one session, sequential, "

@@ -34,7 +34,8 @@ OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
 
 def main() -> int:
     from mqtt_influx_storage_service_spark.operators.dedup import (
-        _doc_shingles, _minhash_banded, near_dup_screen, release_shingles)
+        _doc_shingles, _minhash_banded, near_dup_screen)
+    from mqtt_influx_storage_service_spark.cache import release
     from mqtt_influx_storage_service_spark.session import get_spark
     from mqtt_influx_storage_service_spark.sources import load_table
 
@@ -74,7 +75,7 @@ def main() -> int:
                  "f10 batch is near-dup variants of the f100 corpus's "
                  "source docs, so a healthy screen flags most of it."),
     }
-    release_shingles(spark)
+    release(spark)
     banded.unpersist()
 
     results = {}

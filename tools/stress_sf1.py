@@ -189,15 +189,9 @@ def main() -> int:
             # memory under the retrieval tier and the timings measure
             # eviction/spill, not the plan (text_bm25 swung 9 s ↔ 23 s
             # run-to-run before this release point)
-            from mqtt_influx_storage_service_spark.operators.dedup import (
-                release_shingles,
-            )
-            from mqtt_influx_storage_service_spark.operators.similarity import (
-                release_mmr,
-            )
+            from mqtt_influx_storage_service_spark.cache import release
 
-            release_shingles(spark)
-            release_mmr(spark)
+            release(spark)
         t0 = time.time()
         try:
             qs[name](spark, STRESS_DIR).write.format("noop").mode(
