@@ -69,17 +69,16 @@ def main() -> int:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
-    from mqtt_influx_storage_service_spark.operators import all_queries
+    from mqtt_influx_storage_service_spark.operators import JVM_WARMUP, all_queries
     from mqtt_influx_storage_service_spark.session import get_spark
 
     spark = get_spark("bench")
     qs = all_queries()
 
-    # Warm the JVM / parquet footer caches once so per-query numbers
-    # measure the plan, not first-touch overheads. A broken warm-up must
-    # not kill the whole run (r2 died here with zero timings): try a
-    # couple of cheap queries from different table families.
-    for warm in ("rel_pricing_summary", "ts_series_scan"):
+    # Warm the JVM / parquet footer caches once (operators.JVM_WARMUP).
+    # A broken warm-up must not kill the whole run (r2 died here with
+    # zero timings).
+    for warm in JVM_WARMUP:
         try:
             qs[warm](spark, sf_dir).write.format("noop").mode("overwrite").save()
         except Exception as exc:  # noqa: BLE001 - warm-up is best-effort
@@ -144,6 +143,7 @@ def _run_suite(spark, qs, sf_dir) -> dict:
     """One full measurement attempt: start canary → every registered
     query (min-of-2 + the top-decile variance phase) → end canary."""
     from mqtt_influx_storage_service_spark.cache import release_for
+    from mqtt_influx_storage_service_spark.operators import WARM_REPS
 
     canary_start = _canary(spark)
 
@@ -162,29 +162,8 @@ def _run_suite(spark, qs, sf_dir) -> dict:
 
     for name in headline_names(qs):
         try:
-            if name in (
-                "dedup_substring",
-                "dedup_substring_spans",
-                # VERDICT r8 residue: the committed r8 artifact's
-                # top-decile rows still showed min-of-5 spreads of 349%
-                # (sim_ann_ivf), 332% (dedup_substring_scrub) and 273%
-                # (pipeline_dsir_resample) — same first-touch
-                # shuffle/page-cache shape, same treatment.
-                "sim_ann_ivf",
-                "dedup_substring_scrub",
-                "pipeline_dsir_resample",
-                # r9: the capped-candidate rework gave these the same
-                # first-touch bucket-aggregation shape (258%/90%
-                # min-of-5 spreads on a wobbly box without warm-up)
-                "dedup_ngram_jaccard",
-                "dedup_containment",
-            ):
-                # one DISCARDED warm rep: these showed >148% min-max
-                # spreads at sf0.1 (VERDICT r6 #5 / r8 residue),
-                # dominated by first-touch shuffle/page-cache effects;
-                # warming once brings the timed reps onto the steady
-                # state the number claims.
-                _one_rep(name)
+            if name in WARM_REPS:
+                _one_rep(name)  # discarded: first-touch warm-up
             reps = [_one_rep(name) for _ in range(2)]
             rep_times[name] = reps
             timings[name] = round(min(reps), 3)
@@ -493,22 +472,27 @@ def _emit(payload: dict) -> None:
     slim = dict(payload)
     slim["queries_file"] = detail
 
+    # each shedder rewrites only keys the payload already has
     def _shed_variance_notes(p: dict) -> None:
-        p["top_decile_variance"] = {
-            k: {kk: vv for kk, vv in v.items() if kk != "note"}
-            for k, v in p.get("top_decile_variance", {}).items()
-        }
+        if "top_decile_variance" in p:
+            p["top_decile_variance"] = {
+                k: {kk: vv for kk, vv in v.items() if kk != "note"}
+                for k, v in p["top_decile_variance"].items()
+            }
 
     def _shed_gate_prose(p: dict) -> None:
-        gate = dict(p.get("contention_gate", {}))
+        if "contention_gate" not in p:
+            return
+        gate = dict(p["contention_gate"])
         if "diagnosis" in gate:
             gate["diagnosis"] = "contended; full text in BENCH_DETAIL.json"
         if "crash_exc" in gate:
-            gate["crash_exc"] = gate["crash_exc"][:60]
+            gate["crash_exc"] = str(gate["crash_exc"])[:60]
         p["contention_gate"] = gate
 
     def _shed_variance_block(p: dict) -> None:
-        p["top_decile_variance"] = {"see": "BENCH_DETAIL.json"}
+        if "top_decile_variance" in p:
+            p["top_decile_variance"] = {"see": "BENCH_DETAIL.json"}
 
     shedders = [_shed_variance_notes, _shed_gate_prose, _shed_variance_block]
     floor = min(_MIN_INLINE_QUERIES, len(ranked))
@@ -524,7 +508,7 @@ def _emit(payload: dict) -> None:
         if len(line) <= _TAIL_BUDGET or not shedders:
             break
         shedders.pop(0)(slim)
-    if len(line) > _TAIL_BUDGET and floor > 0:
+    if len(line) > _TAIL_BUDGET:
         # absolute fallback (should be unreachable: 10 query entries +
         # the shed payload fit with hundreds of chars to spare): a
         # head-truncated line is unparseable, which is worse than an

@@ -2923,7 +2923,7 @@ def influxql_into(
     ``..streaming.cq`` maintains the rollup incrementally; INTO is the
     one-shot batch form over history.
     """
-    from ..tableformat import snapshot_table
+    from ..tableformat import SnapshotTable
 
     stmt = parse(query)
     if not isinstance(stmt, Select) or not stmt.into:
@@ -2940,7 +2940,7 @@ def influxql_into(
         raise InfluxQLError(
             "SELECT ... INTO needs a time bucket or tag grouping to key on"
         )
-    table = snapshot_table(spark, table_path, key_cols=keys)
+    table = SnapshotTable(spark, table_path, key_cols=keys)
     if table.version() == 0:
         table.overwrite(df)  # first write: no current snapshot to merge
     else:

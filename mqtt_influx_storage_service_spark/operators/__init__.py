@@ -134,6 +134,33 @@ COLD_TAGS: dict[str, tuple[str, ...]] = {
     "pipeline_epochs": ("curated",),
 }
 
+# Queries that get one DISCARDED warm rep before their timed reps:
+# these showed >148% min-max spreads at sf0.1 (VERDICT r6 #5 / r8
+# residue), dominated by first-touch shuffle/page-cache effects;
+# warming once brings the timed reps onto the steady state the number
+# claims.
+WARM_REPS: tuple[str, ...] = (
+    "dedup_substring",
+    "dedup_substring_spans",
+    # VERDICT r8 residue: the committed r8 artifact's top-decile rows
+    # still showed min-of-5 spreads of 349% (sim_ann_ivf), 332%
+    # (dedup_substring_scrub) and 273% (pipeline_dsir_resample) — same
+    # first-touch shuffle/page-cache shape, same treatment.
+    "sim_ann_ivf",
+    "dedup_substring_scrub",
+    "pipeline_dsir_resample",
+    # r9: the capped-candidate rework gave these the same first-touch
+    # bucket-aggregation shape (258%/90% min-of-5 spreads on a wobbly
+    # box without warm-up)
+    "dedup_ngram_jaccard",
+    "dedup_containment",
+)
+
+# Cheap queries from different table families that warm the JVM and
+# the parquet footer caches once before a bench suite, so per-query
+# numbers measure the plan, not first-touch overheads.
+JVM_WARMUP: tuple[str, ...] = ("rel_pricing_summary", "ts_series_scan")
+
 _MODULES = [
     influxqlq,
     dedup,

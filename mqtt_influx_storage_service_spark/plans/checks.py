@@ -114,11 +114,22 @@ def single_partition_exchanges(df: DataFrame) -> int:
 def exchange_count(df: DataFrame) -> int:
     """Number of shuffle exchanges in the plan (AQE may coalesce at
     runtime, but each Exchange is a full network round of the data —
-    the unit of cost that dominates at 100 TB)."""
-    return len(re.findall(
-        r"Exchange (?:hashpartitioning|rangepartitioning|RoundRobinPartitioning|SinglePartition)",
-        plan_str(df, "simple"),
-    ))
+    the unit of cost that dominates at 100 TB). A persisted relation's
+    subtree (printed below its ``InMemoryRelation``) is skipped: its
+    exchanges run in the job that materializes the cache, and AQE
+    prints that subtree twice (final and initial plan)."""
+    n, cached_depth = 0, None
+    for line in plan_str(df, "simple").splitlines():
+        body = line.lstrip(" +-:")
+        depth = len(line) - len(body)
+        if cached_depth is not None and depth > cached_depth:
+            continue
+        cached_depth = depth if body.startswith("InMemoryRelation") else None
+        n += len(re.findall(
+            r"Exchange (?:hashpartitioning|rangepartitioning|RoundRobinPartitioning|SinglePartition)",
+            body,
+        ))
+    return n
 
 
 def executed_shuffle_stages(df: DataFrame) -> int | None:

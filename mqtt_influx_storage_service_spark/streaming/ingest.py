@@ -128,51 +128,15 @@ def bridge_lines_to_mqtt(lines: DataFrame, arrival_ts) -> DataFrame:
     ).filter(F.col("topic").isNotNull())
 
 
-def mqtt_kafka_stream(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    starting_offsets: str = "earliest",
-) -> DataFrame:
-    """Kafka twin of :func:`mqtt_socket_stream` (VERDICT r5 #5): an
-    MQTT→Kafka bridge (or the broker's own Kafka connector) lands each
-    message as a JSON line in the record value; this source maps the
-    Kafka record shape onto the seam contract via the SAME
-    :func:`bridge_lines_to_mqtt` projection the socket path uses, with
-    the Kafka broker timestamp as the arrival fallback. Unlike the
-    socket edge, Kafka offsets are replayable, so the checkpointed
-    sink's exactly-once guarantee extends to this transport — the
-    production edge the reference's long-lived MQTT subscription
-    (influx_service.py:47-97,424,432) maps to.
-
-    Requires the ``spark-sql-kafka`` connector on the classpath (not
-    bundled with PySpark; no broker nor connector ships in this
-    container, so the wiring is pinned by the transport-agnostic
-    conformance test instead of a live broker —
-    tests/test_streaming.py::test_bridge_source_conformance).
-    """
-    raw = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-        .option("failOnDataLoss", "false")
-        .load()
-    )
-    lines = raw.select(
-        F.col("value").cast("string").alias("value"), F.col("timestamp")
-    )
-    return bridge_lines_to_mqtt(lines, F.col("timestamp"))
-
-
 def make_source(spark: SparkSession, cfg) -> DataFrame:
     """One switchable source config (VERDICT r5 #5): build the ingest
     source from ``ServiceConfig`` keys — ``source_type`` in
-    {``file`` (default), ``socket``, ``kafka``} plus the transport's
-    own keys (``source_dir`` / ``socket_host``+``socket_port`` /
-    ``kafka_bootstrap``+``kafka_topic``). Every branch returns the
-    same (ts, topic, payload) relation, so ``start_ingest(source=
-    make_source(spark, cfg))`` never knows which transport fed it."""
+    {``file`` (default), ``socket``} plus the transport's own keys
+    (``source_dir`` / ``socket_host``+``socket_port``). Every branch
+    returns the same (ts, topic, payload) relation, so
+    ``start_ingest(source=make_source(spark, cfg))`` never knows which
+    transport fed it. A further transport (e.g. Kafka) is one more
+    branch feeding :func:`bridge_lines_to_mqtt`; see MIGRATION.md."""
     kind = (cfg.get("source_type", "file") or "file").lower()
     if kind == "file":
         d = cfg.get("source_dir")
@@ -185,13 +149,6 @@ def make_source(spark: SparkSession, cfg) -> DataFrame:
             cfg.get("socket_host", "localhost"),
             cfg.get_int("socket_port", 1883),
         )
-    if kind == "kafka":
-        bs, topic = cfg.get("kafka_bootstrap"), cfg.get("kafka_topic")
-        if not bs or not topic:
-            raise ValueError(
-                "source_type=kafka needs kafka_bootstrap and kafka_topic"
-            )
-        return mqtt_kafka_stream(spark, bs, topic)
     raise ValueError(f"unknown source_type {kind!r}")
 
 

@@ -104,6 +104,32 @@ def test_emit_keeps_ten_slowest_inline_over_prose(tmp_path, monkeypatch, capsys)
     assert all("note" in v for v in detail["top_decile_variance"].values())
 
 
+def test_emit_sheds_without_inventing_keys(tmp_path, monkeypatch, capsys):
+    """The shedders must cope with a non-string ``crash_exc`` (a
+    structured exception record) and must not write back keys the
+    payload never had: no ``top_decile_variance`` in, none out."""
+    monkeypatch.setattr(bench, "_REPO", str(tmp_path))
+    payload = {
+        "metric": "headline_query_suite_sec",
+        "value": 100.0,
+        "queries": _fake_queries(225),
+        "failed": [],
+        "contention_gate": {
+            "gate_pct": 15.0,
+            "crash_exc": {"type": "Py4JJavaError",
+                          "trace": [f"at frame {i}" for i in range(200)]},
+        },
+    }
+    bench._emit(payload)
+    line = capsys.readouterr().out.strip().splitlines()[-1]
+    assert len(line) <= bench._TAIL_BUDGET
+    parsed = json.loads(line)
+    assert set(parsed) <= set(payload) | {"queries_file", "queries_omitted"}
+    assert "top_decile_variance" not in parsed
+    assert len(parsed["contention_gate"]["crash_exc"]) <= 60
+    assert len(parsed["queries"]) >= bench._MIN_INLINE_QUERIES
+
+
 def test_emit_names_detail_file_by_core_count(tmp_path, monkeypatch, capsys):
     """A low-core probe (SPARK_GRAFT_CPUS=8) must not overwrite the main
     run's BENCH_DETAIL.json; every payload stamps its core count."""
@@ -174,6 +200,21 @@ def test_one_rep_release_discipline_covers_r14_persists(spark, sf_dir, owned):
         assert owned("labels")
     finally:
         cache.release(spark)
+
+
+def test_warm_rep_names_are_registry_keys():
+    """bench.py names no query: the warm-rep and JVM warm-up lists live
+    in the registry module, so a renamed query must fail here instead
+    of silently losing its warm-up."""
+    from mqtt_influx_storage_service_spark.operators import (
+        JVM_WARMUP,
+        WARM_REPS,
+        all_queries,
+    )
+
+    qs = all_queries()
+    assert set(WARM_REPS) <= set(qs)
+    assert set(JVM_WARMUP) <= set(qs)
 
 
 def test_prior_round_ratio_uses_newest_parsed_round(tmp_path, monkeypatch):

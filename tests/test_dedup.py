@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from mqtt_influx_storage_service_spark import cache
+from mqtt_influx_storage_service_spark import cache, plans
 from mqtt_influx_storage_service_spark.operators.dedup import (
     dedup_exact,
     dedup_minhash_lsh,
@@ -763,7 +763,7 @@ def test_exact_count_fork_matches_array_verify(spark, sf_dir, monkeypatch, owned
         plan = fast_j._jdf.queryExecution().executedPlan().toString()
         assert "array_intersect" not in plan
         assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
-        assert plan.count("Exchange hashpartitioning") == 2
+        assert plans.exchange_count(fast_j) == 2
         fast_rows = sorted(map(tuple, fast_j.collect()))
         fast_cont = sorted(
             map(tuple, DD.dedup_containment(spark, sf_dir).collect())

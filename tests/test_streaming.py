@@ -962,11 +962,12 @@ def test_journal_duplicate_delivery_absorbed_by_stream_dedup(spark, tmp_path):
 
 
 def test_bridge_line_contract(spark):
-    """Pin the bridge-line seam contract shared by the socket and
-    Kafka sources (VERDICT r5 #5): JSON line → (ts, topic, payload);
-    missing/unparseable ts falls back to the transport arrival
-    timestamp; a line with no parseable topic is dropped. Pure column
-    algebra, so the batch run here certifies the streaming behavior."""
+    """Pin the bridge-line seam contract shared by the socket source
+    and any JSON-line transport (VERDICT r5 #5): JSON line → (ts,
+    topic, payload); missing/unparseable ts falls back to the transport
+    arrival timestamp; a line with no parseable topic is dropped. Pure
+    column algebra, so the batch run here certifies the streaming
+    behavior."""
     fallback = "2024-06-01 12:00:00"
     df = spark.createDataFrame(
         [
@@ -1032,7 +1033,7 @@ def test_bridge_source_conformance(spark, mqtt_source, tmp_path):
 
 
 def test_make_source_dispatch(spark, tmp_path):
-    """make_source: one switchable config for the three transports;
+    """make_source: one switchable config for the two transports;
     every branch yields the seam relation or fails actionably."""
     from mqtt_influx_storage_service_spark.config import ServiceConfig
 
@@ -1045,8 +1046,6 @@ def test_make_source_dispatch(spark, tmp_path):
     ]
     with pytest.raises(ValueError, match="source_dir"):
         st.make_source(spark, ServiceConfig({"source_type": "file"}))
-    with pytest.raises(ValueError, match="kafka_bootstrap"):
-        st.make_source(spark, ServiceConfig({"source_type": "kafka"}))
     with pytest.raises(ValueError, match="unknown source_type"):
         st.make_source(spark, ServiceConfig({"source_type": "carrier-pigeon"}))
 

@@ -14,12 +14,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from mqtt_influx_storage_service_spark.tableformat import (
-    DeltaSnapshotTable,
-    SnapshotTable,
-    delta_available,
-    snapshot_table,
-)
+from mqtt_influx_storage_service_spark.tableformat import SnapshotTable
 
 TS = dt.datetime(2024, 1, 1, 12, 0, 0)
 
@@ -95,70 +90,6 @@ def test_compact_and_vacuum_preserve_rows(spark, registry, tmp_path):
     assert sorted(r.device_id for r in registry.read().collect()) == before
 
 
-def test_factory_falls_back_without_delta(spark, tmp_path):
-    """snapshot_table() must return a working table either way: the
-    parquet SnapshotTable in this sandbox (delta-spark not installed),
-    a DeltaSnapshotTable where it is — same contract both ways."""
-    t = snapshot_table(
-        spark, str(tmp_path / "fac"), ["device_id"],
-        schema="device_id string, registered_ts timestamp",
-    )
-    expected = DeltaSnapshotTable if delta_available() else SnapshotTable
-    assert isinstance(t, expected)
-    t.merge(spark.createDataFrame([("a", _ts(0))], t.schema), batch_id=0)
-    assert t.merge(
-        spark.createDataFrame([("a", _ts(1))], t.schema), batch_id=0
-    ) is False  # replay no-op through the factory-built table
-    assert {r.device_id for r in t.read().collect()} == {"a"}
-
-
-@pytest.mark.skipif(not delta_available(), reason="delta-spark not installed")
-def test_delta_contract_matches_snapshot_table(spark, tmp_path):
-    """Where delta-spark IS installed, the DeltaSnapshotTable must pass
-    the same contract the SnapshotTable tests pin: upsert MERGE,
-    batch-id replay no-op, insert-only first-writer-wins, time travel,
-    and compaction preserving rows — the module docstring's migration
-    mapping, executed."""
-    t = DeltaSnapshotTable(
-        spark, str(tmp_path / "dreg"), ["device_id"],
-        schema="device_id string, registered_ts timestamp",
-    )
-    t.merge(spark.createDataFrame(
-        [("a", _ts(0)), ("b", _ts(1))], t.schema), batch_id=0)
-    t.merge(spark.createDataFrame(
-        [("b", _ts(5)), ("c", _ts(6))], t.schema), batch_id=1)
-    rows = {r.device_id: r.registered_ts for r in t.read().collect()}
-    assert rows == {"a": _ts(0), "b": _ts(5), "c": _ts(6)}
-    assert t.version() == 2
-    # crash-replay idempotence
-    v = t.version()
-    assert t.merge(spark.createDataFrame(
-        [("z", _ts(9))], t.schema), batch_id=1) is False
-    assert t.version() == v
-    assert t.applied_batch_ids() == {0, 1}
-    # time travel to the pre-second-merge snapshot
-    old = {r.device_id: r.registered_ts
-           for r in t.read(version=1).collect()}
-    assert old == {"a": _ts(0), "b": _ts(1)}
-    # insert-only first-writer-wins
-    p = DeltaSnapshotTable(
-        spark, str(tmp_path / "dpairs"), ["device_id", "transducer"],
-        schema="device_id string, transducer string, created_ts timestamp",
-    )
-    p.merge(spark.createDataFrame([("d1", "temp", _ts(0))], p.schema),
-            batch_id=0, insert_only=True)
-    p.merge(spark.createDataFrame(
-        [("d1", "temp", _ts(9)), ("d1", "hum", _ts(10))], p.schema),
-        batch_id=1, insert_only=True)
-    got = {(r.device_id, r.transducer): r.created_ts
-           for r in p.read().collect()}
-    assert got == {("d1", "temp"): _ts(0), ("d1", "hum"): _ts(10)}
-    # compaction preserves rows
-    before = sorted(r.device_id for r in t.read().collect())
-    t.compact()
-    assert sorted(r.device_id for r in t.read().collect()) == before
-
-
 def _write_msgs(spark, path, rows):
     spark.createDataFrame(
         rows, "ts timestamp, topic string, payload string"
@@ -226,19 +157,3 @@ def test_transducer_autocreate_exactly_once(spark, tmp_path):
     assert rows2[("d1", "temp")] == _ts(2)
     assert len(rows2) == 2
 
-
-def test_delta_skip_reason_is_import_absence_only():
-    """CI-style guard (VERDICT r4 #9): the Delta contract test may skip
-    ONLY because delta-spark is not importable. If the package ever
-    appears in this environment, delta_available() flips true, the
-    skipif above stops skipping, and any breakage in DeltaSnapshotTable
-    fails the suite loudly instead of hiding behind a stale skip."""
-    try:
-        import delta  # noqa: F401
-        importable = True
-    except ImportError:
-        importable = False
-    assert delta_available() == importable, (
-        "delta_available() disagrees with a direct import probe — the "
-        "contract test's skip condition no longer tracks import absence"
-    )
