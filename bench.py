@@ -54,12 +54,11 @@ def headline_names(qs: dict) -> list[str]:
 # ratios can be normalized mechanically (r7 committed a contended
 # 1.685x ratio that an idle re-run measured at 1.25x — the canary makes
 # that drift visible inside the artifact instead of argued in prose).
-# Since r14 the canary job and the box's calibrated band history live
-# in tools/regimestamp.py, SHARED with the stress tools and the skew
-# census (VERDICT r13 #4) — one definition, cross-comparable stamps.
-from tools.regimestamp import CANARY_ROWS as _CANARY_ROWS
-from tools.regimestamp import band as _canary_band
-from tools.regimestamp import canary as _canary
+# Since r14 the canary job, the box's calibrated band history, the
+# attempt gate and the cold rep live in tools/regimestamp.py, SHARED
+# with the stress tools, the skew census and tools/isolate.py (VERDICT
+# r13 #4) — one definition, cross-comparable stamps.
+from tools import regimestamp
 
 from mqtt_influx_storage_service_spark.session import local_cpus
 
@@ -95,38 +94,25 @@ def main() -> int:
     # box speed CHANGED under the suite — numbers from a box that is
     # speeding up or slowing down mid-run are not comparable to other
     # rounds no matter how many reps each query gets. The whole suite
-    # is therefore an ATTEMPT: if |start-end| canary drift exceeds
-    # DRIFT_GATE_PCT the suite re-runs (bounded), and the artifact
-    # publishes per-query MIN-of-all-attempts floors plus every
-    # attempt's drift; if no attempt passes, the artifact carries the
-    # pinned diagnosis instead of silently publishing contended data.
-    attempts: list[dict] = []
-    crash: dict | None = None
-    for attempt_i in range(_MAX_ATTEMPTS):
-        try:
-            att = _run_suite(spark, qs, sf_dir)
-        except Exception as exc:  # noqa: BLE001 - a retry crash must not
-            # discard a completed earlier attempt: the gate exists to
-            # SALVAGE contended runs, so publish what we have — but the
-            # gate dict must RECORD the crash (ADVICE r12): otherwise a
-            # "drift stayed above the gate for all N attempts" diagnosis
-            # implies retries were exhausted when they were cut short.
-            print(f"bench: attempt {attempt_i + 1} crashed: {exc}",
-                  file=sys.stderr)
-            crash = {"attempt": attempt_i + 1, "exc": repr(exc)[:300]}
-            if attempts:
-                break
-            raise
-        attempts.append(att)
-        print(
-            f"bench: attempt {attempt_i + 1} canary drift "
-            f"{att['drift_pct']}%",
-            file=sys.stderr,
-        )
-        if att["drift_pct"] <= _DRIFT_GATE_PCT:
-            break
+    # is therefore one regimestamp.gated ATTEMPT: if |start-end| canary
+    # drift exceeds regimestamp.GATE_PCT the suite re-runs (bounded),
+    # and the artifact publishes per-query MIN-of-all-attempts floors
+    # plus every attempt's drift; if no attempt passes, the artifact
+    # carries the pinned diagnosis instead of silently publishing
+    # contended data. The gate is on drift alone (require_calm=False):
+    # the canary band is published, not retried on.
+    gate = regimestamp.gated(
+        spark, lambda: _run_suite(spark, qs, sf_dir), require_calm=False
+    )
+    for i, att in enumerate(gate["attempts"], 1):
+        print(f"bench: attempt {i} canary drift {att['drift_pct']}%",
+              file=sys.stderr)
+    crash = gate.get("crash")
+    if crash is not None:
+        print(f"bench: attempt {crash['attempt']} crashed: {crash['exc']}",
+              file=sys.stderr)
 
-    payload = _merge_attempts(attempts, crash=crash)
+    payload = _merge_attempts(gate["attempts"], crash=crash)
     payload["sf"] = sf
     payload.update(
         _prior_round_ratio(payload["queries"], payload["canary"]["sec"])
@@ -135,30 +121,18 @@ def main() -> int:
     return 0
 
 
-_DRIFT_GATE_PCT = 15.0
-_MAX_ATTEMPTS = 3
-
-
 def _run_suite(spark, qs, sf_dir) -> dict:
-    """One full measurement attempt: start canary → every registered
-    query (min-of-2 + the top-decile variance phase) → end canary."""
-    from mqtt_influx_storage_service_spark.cache import release_for
+    """One full measurement attempt (regimestamp.gated brackets it with
+    the start/end canaries): every registered query (min-of-2 + the
+    top-decile variance phase), then the streaming ingest."""
     from mqtt_influx_storage_service_spark.operators import WARM_REPS
-
-    canary_start = _canary(spark)
 
     timings: dict[str, float | None] = {}
     rep_times: dict[str, list[float]] = {}
 
     def _one_rep(name: str) -> float:
-        # a query that memoizes its own campaign persist declares it
-        # cold (operators.COLD_TAGS); without the release the second
-        # rep times the warm cache, not the plan
-        release_for(spark, name)
-        t0 = time.time()
-        df = qs[name](spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        return time.time() - t0
+        # build + noop-sink execution of one cold rep (regimestamp.rep)
+        return sum(regimestamp.rep(spark, qs, name, sf_dir))
 
     for name in headline_names(qs):
         try:
@@ -222,19 +196,7 @@ def _run_suite(spark, qs, sf_dir) -> dict:
         print(f"bench: stream_ingest failed: {exc}", file=sys.stderr)
         timings["stream_ingest"] = None
 
-    canary_end = _canary(spark)
-    return {
-        "timings": timings,
-        "rep_times": rep_times,
-        "canary_start": canary_start,
-        "canary_end": canary_end,
-        "drift_pct": round(
-            100
-            * abs(canary_end - canary_start)
-            / min(canary_start, canary_end),
-            1,
-        ),
-    }
+    return {"timings": timings, "rep_times": rep_times}
 
 
 def _merge_attempts(attempts: list[dict], crash: dict | None = None) -> dict:
@@ -244,7 +206,19 @@ def _merge_attempts(attempts: list[dict], crash: dict | None = None) -> dict:
     not, STRESS_r10 `variance_phase_diag`), the lowest-drift attempt's
     canary as the machine-speed anchor, and the full drift history so
     a contended window is visible inside the artifact instead of
-    argued in prose. A query is `failed` only if NO attempt ran it."""
+    argued in prose. A query is `failed` only if NO attempt ran it.
+
+    ``attempts`` are ``regimestamp.gated``'s records, each carrying one
+    ``_run_suite`` result and the attempt's canary stamps."""
+    attempts = [
+        {
+            **a["result"],
+            "canary_start": a["start"]["canary_sec"],
+            "canary_end": a["end"]["canary_sec"],
+            "drift_pct": a["drift_pct"],
+        }
+        for a in attempts
+    ]
     names: list[str] = []
     for att in attempts:
         for k in att["timings"]:
@@ -311,9 +285,9 @@ def _merge_attempts(attempts: list[dict], crash: dict | None = None) -> dict:
                 "rebuilds; floor is the published number"
             )
     drifts = [a["drift_pct"] for a in attempts]
-    contended = best["drift_pct"] > _DRIFT_GATE_PCT
+    contended = best["drift_pct"] > regimestamp.GATE_PCT
     gate = {
-        "gate_pct": _DRIFT_GATE_PCT,
+        "gate_pct": regimestamp.GATE_PCT,
         "attempts": len(attempts),
         "drift_pct_per_attempt": drifts,
         "contended_after_retries": contended,
@@ -332,7 +306,7 @@ def _merge_attempts(attempts: list[dict], crash: dict | None = None) -> dict:
             else ""
         )
         gate["diagnosis"] = (
-            f"in-run canary drift stayed above {_DRIFT_GATE_PCT}% for "
+            f"in-run canary drift stayed above {regimestamp.GATE_PCT}% for "
             f"all {len(attempts)} completed attempts — the box was "
             "contended for the whole bench window; per-query "
             "MIN-of-all-attempts floors are published (floors reproduce "
@@ -356,7 +330,7 @@ def _merge_attempts(attempts: list[dict], crash: dict | None = None) -> dict:
         "top_decile_variance": variance,
         "contention_gate": gate,
         "canary": {
-            "rows": _CANARY_ROWS,
+            "rows": regimestamp.CANARY_ROWS,
             "start_sec": best["canary_start"],
             "end_sec": best["canary_end"],
             "sec": canary_sec,
@@ -364,7 +338,7 @@ def _merge_attempts(attempts: list[dict], crash: dict | None = None) -> dict:
             # calibrated regime band (tools/regimestamp.py): walls
             # from a 'degraded' window are unusable no matter what
             # the within-run drift says (the r13 third-regime lesson)
-            "band": _canary_band(canary_sec),
+            "band": regimestamp.band(canary_sec),
         },
     }
 

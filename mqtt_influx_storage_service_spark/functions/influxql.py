@@ -1475,27 +1475,8 @@ class _Compiler:
             if len(ms) != 1:
                 raise InfluxQLError("a subquery must be the only FROM source")
             return self._subquery_source(ms[0]), False
-        names: list[str] = []
-        multi = False
-        for m in ms:
-            if isinstance(m, Rgx):
-                rx = re.compile(m.pattern)
-                hit = [n for n in self.catalog.measurement_names() if rx.search(n)]
-                names.extend(hit)
-                multi = True
-            else:
-                names.append(m.value)
-        if not names:
-            raise InfluxQLError("no measurement matched FROM clause")
-        multi = multi or len(names) > 1
-        uniq = list(dict.fromkeys(names))
-        if len(uniq) > 1 and hasattr(self.catalog, "load_many"):
-            # one scan with an IN filter instead of N unioned scans
-            return self.catalog.load_many(self.spark, uniq), multi
-        df = self.catalog.load(self.spark, uniq[0])
-        for n in uniq[1:]:
-            df = df.unionByName(self.catalog.load(self.spark, n))
-        return df, multi
+        names, multi = resolve_from(self.catalog, ms)
+        return _union_measurements(self.spark, self.catalog, names), multi
 
     def _subquery_source(self, inner_stmt: Select) -> DataFrame:
         """Compile the inner SELECT and present its result as this
@@ -2970,8 +2951,29 @@ def _show_measurements(cat, frm) -> list[str]:
     return uniq
 
 
+def resolve_from(cat, measurements: list) -> tuple[list[str], bool]:
+    """Resolve a SELECT's FROM measurements (names and /regex/es, the
+    regexes matched against the catalog in catalog order) to unique
+    names, plus whether the result spans several measurements — a
+    regex always counts as several, so its output keys on
+    ``measurement`` even when it matched one name."""
+    names: list[str] = []
+    multi = False
+    for m in measurements:
+        if isinstance(m, Rgx):
+            rx = re.compile(m.pattern)
+            names.extend(n for n in cat.measurement_names() if rx.search(n))
+            multi = True
+        else:
+            names.append(m.value)
+    if not names:
+        raise InfluxQLError("no measurement matched FROM clause")
+    return list(dict.fromkeys(names)), multi or len(names) > 1
+
+
 def _union_measurements(spark, cat, names: list[str]) -> DataFrame:
     if len(names) > 1 and hasattr(cat, "load_many"):
+        # one scan with an IN filter instead of N unioned scans
         return cat.load_many(spark, names)
     df = cat.load(spark, names[0])
     for n in names[1:]:

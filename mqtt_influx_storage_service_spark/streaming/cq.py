@@ -54,10 +54,10 @@ from ..functions.influxql import (
     Call,
     ContinuousQuery,
     InfluxQLError,
-    Rgx,
     Var,
     _bare_compiler,
     parse_continuous_query,
+    resolve_from,
 )
 from ..functions.influxql import EventsCatalog
 from ..tableformat import SnapshotTable
@@ -107,21 +107,7 @@ def compile_cq(cq_text: str, catalog=None) -> CompiledCQ:
     if st.limit is not None or st.slimit is not None or st.offset:
         raise InfluxQLError("continuous query does not support LIMIT/SLIMIT")
 
-    names: list[str] = []
-    multi = False
-    known = (catalog or EventsCatalog("")).measurement_names()
-    for m in st.measurements:
-        if isinstance(m, Rgx):
-            import re as _re
-
-            rx = _re.compile(m.pattern)
-            names.extend(n for n in known if rx.search(n))
-            multi = True
-        else:
-            names.append(m.value)
-    multi = multi or len(names) > 1
-    if not names:
-        raise InfluxQLError("no measurement matched FROM clause")
+    names, multi = resolve_from(catalog or EventsCatalog(""), st.measurements)
 
     aggs: list[_AggSpec] = []
     for i, f in enumerate(st.fields):
@@ -160,7 +146,7 @@ def compile_cq(cq_text: str, catalog=None) -> CompiledCQ:
         cq.name,
         cq.database,
         st,
-        list(dict.fromkeys(names)),
+        names,
         multi,
         key_cols,
         group_tags,

@@ -7,12 +7,14 @@ again."""
 
 from __future__ import annotations
 
+import ast
 import json
-import sys
-
-sys.path.insert(0, "/root/repo")
+import os
 
 import bench
+from tools import regimestamp
+
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _fake_queries(n):
@@ -189,8 +191,20 @@ def test_one_rep_release_discipline_covers_r14_persists(spark, sf_dir, owned):
         for q in ("text_bm25", "pipeline_training_mix"):
             qs[q](spark, sf_dir).write.format("noop").mode("overwrite").save()
         assert owned("bm25") and owned("curated") and owned("labels")
-        assert cache.release_for(spark, "sim_hybrid_rrf") == 1
-        assert not owned("bm25")
+        # the shared cold rep (bench and tools/isolate.py) releases the
+        # query's cold tags BEFORE it builds; the stand-in query
+        # records what was resident when its build started
+        at_build = {}
+
+        def build(spark_, sf):
+            at_build.update(bm25=bool(owned("bm25")),
+                            curated=bool(owned("curated")))
+            return spark_.range(1)
+
+        construct_s, exec_s = regimestamp.rep(
+            spark, {"sim_hybrid_rrf": build}, "sim_hybrid_rrf", sf_dir)
+        assert at_build == {"bm25": False, "curated": True}
+        assert construct_s >= 0 and exec_s >= 0
         assert owned("curated") and owned("labels")
         assert cache.release_for(spark, "pipeline_epochs") == 1
         assert not owned("curated")
@@ -269,28 +283,35 @@ def test_canary_normalization_contract(tmp_path, monkeypatch):
 def test_canary_is_fixed_work_and_sf_independent():
     """The canary job is built from constants only (no SPARK_GRAFT_SF_DIR
     reads), so its wall time is comparable across rounds regardless of
-    the benched scale factor."""
+    the benched scale factor. It lives in tools/regimestamp.py, SHARED
+    by bench (through ``gated``), the stress tools and the skew census
+    (VERDICT r13 #4); bench holds no copy."""
     import inspect
 
-    # since r14 the canary lives in tools/regimestamp.py, SHARED with
-    # the stress tools and the skew census (VERDICT r13 #4) — bench
-    # must alias that one job, not fork its own
-    from tools import regimestamp
-
-    assert bench._canary is regimestamp.canary
-    assert bench._CANARY_ROWS == regimestamp.CANARY_ROWS
-    src = inspect.getsource(bench._canary)
+    src = inspect.getsource(regimestamp.canary)
     assert "CANARY_ROWS" in src
     assert "sf_dir" not in src and "SPARK_GRAFT" not in src
+    assert not hasattr(bench, "_canary")
+
+
+def _stamp(sec):
+    return {"canary_sec": sec, "band": regimestamp.band(sec),
+            "rows": regimestamp.CANARY_ROWS}
 
 
 def _attempt(drift, reps, canary=(0.5, 0.5)):
+    """One ``regimestamp.gated`` attempt record around a ``_run_suite``
+    result."""
     return {
-        "timings": {k: (round(min(v), 3) if v else None) for k, v in reps.items()},
-        "rep_times": reps,
-        "canary_start": canary[0],
-        "canary_end": canary[1],
+        "start": _stamp(canary[0]),
+        "end": _stamp(canary[1]),
         "drift_pct": drift,
+        "calm": True,
+        "result": {
+            "timings": {k: (round(min(v), 3) if v else None)
+                        for k, v in reps.items()},
+            "rep_times": reps,
+        },
     }
 
 
@@ -387,3 +408,34 @@ def test_merge_attempts_records_crash(monkeypatch):
                                crash={"attempt": 2, "exc": "X"})
     assert ok["contention_gate"]["crashed_attempt"] == 2
     assert "diagnosis" not in ok["contention_gate"]
+
+
+def test_no_file_pins_an_absolute_import_root():
+    """tools/, tests/ and bench.py import the package from their OWN
+    checkout: a literal absolute ``sys.path`` entry or module location
+    makes a second checkout (a parent-vs-change comparison) silently
+    import and test the first one's tree."""
+    files = [os.path.join(_ROOT, "bench.py")] + [
+        os.path.join(_ROOT, d, f)
+        for d in ("tools", "tests")
+        for f in sorted(os.listdir(os.path.join(_ROOT, d)))
+        if f.endswith(".py")
+    ]
+    pinned = []
+    for path in files:
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = ast.unparse(node.func)
+            if not fn.endswith(("sys.path.insert", "sys.path.append",
+                                "spec_from_file_location")):
+                continue
+            for arg in ast.walk(node):
+                if (isinstance(arg, ast.Constant)
+                        and isinstance(arg.value, str)
+                        and arg.value.startswith("/")):
+                    pinned.append(f"{os.path.relpath(path, _ROOT)}:"
+                                  f"{node.lineno} {arg.value}")
+    assert pinned == []

@@ -11,6 +11,7 @@ collect (spark.driver.maxResultSize). Pin its invariants:
 from __future__ import annotations
 
 import importlib.util
+import os
 import sys
 
 import duckdb
@@ -18,7 +19,9 @@ import pandas as pd
 import pytest
 
 spec = importlib.util.spec_from_file_location(
-    "check_oracles", "/root/repo/tools/check_oracles.py")
+    "check_oracles",
+    os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                 "tools", "check_oracles.py"))
 check_oracles = importlib.util.module_from_spec(spec)
 sys.modules["check_oracles"] = check_oracles
 spec.loader.exec_module(check_oracles)

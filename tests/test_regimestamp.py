@@ -4,6 +4,8 @@ contract with stamps faked, so no Spark session is needed."""
 
 from __future__ import annotations
 
+import pytest
+
 from tools import regimestamp as rs
 
 
@@ -49,6 +51,9 @@ def test_gated_retries_until_calm_and_publishes_all_attempts(monkeypatch):
     assert len(out["attempts"]) == 3
     assert len(runs) == 3  # fn re-ran each attempt
     assert out["result"] == {"n": 3}
+    # each attempt keeps its own fn() result, not just the last one
+    assert [a["result"] for a in out["attempts"]] == [
+        {"n": 1}, {"n": 2}, {"n": 3}]
     assert out["attempts"][0]["drift_pct"] == 50.0
     assert out["attempts"][1]["calm"] is False
     assert out["attempts"][2]["calm"] is True
@@ -62,3 +67,60 @@ def test_gated_exhausts_and_reports_failure(monkeypatch):
     out = rs.gated(None, lambda: {}, gate_pct=15.0, max_attempts=2)
     assert out["passed"] is False
     assert len(out["attempts"]) == 2
+
+
+def _fast(spark):
+    return {"canary_sec": 0.40, "band": "fast", "rows": rs.CANARY_ROWS}
+
+
+def test_gated_salvages_a_crash_in_a_retry(monkeypatch):
+    """A retry that crashes cuts the loop short, but the finished
+    attempt is kept and the crash is recorded (bench publishes both)."""
+    stamps = iter([0.40, 0.60, 0.40])  # attempt 1 drifts 50%
+    monkeypatch.setattr(
+        rs, "stamp",
+        lambda spark: {"canary_sec": next(stamps), "band": "fast",
+                       "rows": rs.CANARY_ROWS})
+    calls = []
+
+    def fn():
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("executor lost")
+        return {"n": len(calls)}
+
+    out = rs.gated(None, fn, max_attempts=3)
+    assert len(calls) == 2  # no third attempt after the crash
+    assert [a["result"] for a in out["attempts"]] == [{"n": 1}]
+    assert out["result"] == {"n": 1}
+    assert out["passed"] is False
+    assert out["crash"]["attempt"] == 2
+    assert "executor lost" in out["crash"]["exc"]
+    # what a tool publishes: the stamps and the crash, no fn() results
+    published = rs.regime(out)
+    assert set(published) == {"attempts", "passed", "crash"}
+    assert "result" not in published["attempts"][0]
+
+
+def test_gated_reraises_a_crash_in_the_first_attempt(monkeypatch):
+    monkeypatch.setattr(rs, "stamp", _fast)
+
+    def fn():
+        raise RuntimeError("bad plan")
+
+    with pytest.raises(RuntimeError, match="bad plan"):
+        rs.gated(None, fn)
+
+
+def test_gated_without_require_calm_gates_on_drift_alone(monkeypatch):
+    """bench's rule: a steady degraded window passes on drift (the band
+    is published, not retried on); no crash key without a crash."""
+    monkeypatch.setattr(
+        rs, "stamp",
+        lambda spark: {"canary_sec": 2.0, "band": "degraded",
+                       "rows": rs.CANARY_ROWS})
+    out = rs.gated(None, lambda: {}, require_calm=False)
+    assert out["passed"] is True
+    assert len(out["attempts"]) == 1 and out["attempts"][0]["calm"] is False
+    assert "crash" not in out
+    assert rs.GATE_PCT == 15.0

@@ -1,4 +1,4 @@
-"""Shared machine-regime stamping for every wall-publishing tool
+"""Shared wall measurement for bench.py and every wall-publishing tool
 (VERDICT r13 "Next round" #4).
 
 Through r13, bench.py, the stress tools, and the skew census each
@@ -8,9 +8,9 @@ min-of-runs across a visibly degrading box instead of measured inside
 a certified calm window. This module is the one home for:
 
 - the fixed-work CANARY (constant-size, SF-independent JVM-side job:
-  range -> xxhash64 -> 1024-bucket hash agg, identical to the job
-  bench.py has embedded since r8, so every artifact's machine-speed
-  anchor is cross-comparable);
+  range -> xxhash64 -> 1024-bucket hash agg, the job bench.py has
+  stamped since r8, so every artifact's machine-speed anchor is
+  cross-comparable);
 - the box's calibrated BAND history (measured across r12-r13):
   * fast  ~0.37-0.45 s  (idle box, the band every per-query claim
     wants);
@@ -20,8 +20,10 @@ a certified calm window. This module is the one home for:
     IDLE start — host-level throttling; walls are UNUSABLE, only
     byte metrics survive);
 - the attempt GATE: run the measured section between start/end
-  canaries, retry while the window drifted (> gate_pct) or sat in
+  canaries, retry while the window drifted (> GATE_PCT) or sat in
   the degraded band, publish every attempt's stamps either way.
+  bench.py gates its whole suite on drift alone (require_calm=False);
+- the cold REP that bench.py and tools/isolate.py time per query.
 
 Shuffle-byte metrics reproduce byte-identically across all three
 regimes (six grid-verify runs, r13); wall metrics are only
@@ -35,7 +37,12 @@ from __future__ import annotations
 import time
 from collections.abc import Callable
 
+from mqtt_influx_storage_service_spark.cache import release_for
+
 CANARY_ROWS = 50_000_000
+
+# max start/end canary drift of a comparable window (r10/r11 shipped 35-66%)
+GATE_PCT = 15.0
 
 # Band edges calibrated from the r12/r13 history (BENCH_r12/r13
 # canaries, STRESS_r13 grid wall_history_note). The gap 0.50-0.70 is
@@ -92,7 +99,7 @@ def gated(
     spark,
     fn: Callable[[], dict],
     *,
-    gate_pct: float = 15.0,
+    gate_pct: float = GATE_PCT,
     max_attempts: int = 3,
     require_calm: bool = True,
 ) -> dict:
@@ -100,28 +107,56 @@ def gated(
     drifted beyond ``gate_pct`` or (with ``require_calm``) either
     stamp sat in the degraded band. Returns::
 
-        {"result": <last attempt's fn() dict>,
-         "attempts": [{"start": stamp, "end": stamp,
-                       "drift_pct": f, "calm": bool}, ...],
-         "passed": bool}   # last attempt met the gate
+        {"result": <last finished attempt's fn() value>,
+         "attempts": [{"start": stamp, "end": stamp, "drift_pct": f,
+                       "calm": bool, "result": <its fn() value>}, ...],
+         "passed": bool,   # last finished attempt met the gate
+         "crash": {"attempt": n, "exc": str}}   # only after a crash
 
-    Every attempt's stamps are returned so a tool that exhausts the
-    retries can still publish — with the contended/degraded diagnosis
-    in the artifact instead of silently shipping bad walls (the
-    bench.py contract since r11, now shared)."""
+    Every attempt's stamps are returned, so a caller that exhausts the
+    retries publishes the contended/degraded diagnosis instead of
+    silently shipping bad walls. A first-attempt crash propagates; a
+    later one ends the loop and is recorded, so "retries exhausted" is
+    never claimed for a cut loop."""
     attempts: list[dict] = []
-    result: dict = {}
-    passed = False
-    for _ in range(max_attempts):
-        start = stamp(spark)
-        result = fn()
-        end = stamp(spark)
+    out: dict = {"result": None, "attempts": attempts, "passed": False}
+    for i in range(max_attempts):
+        try:
+            start = stamp(spark)
+            result = fn()
+            end = stamp(spark)
+        except Exception as exc:  # noqa: BLE001 - salvage finished attempts
+            if not attempts:
+                raise
+            out["crash"] = {"attempt": i + 1, "exc": repr(exc)[:300]}
+            break
         d = drift_pct(start["canary_sec"], end["canary_sec"])
         calm = "degraded" not in (start["band"], end["band"])
-        attempts.append(
-            {"start": start, "end": end, "drift_pct": d, "calm": calm}
-        )
-        passed = d <= gate_pct and (calm or not require_calm)
-        if passed:
+        attempts.append({"start": start, "end": end, "drift_pct": d,
+                         "calm": calm, "result": result})
+        out["result"] = result
+        out["passed"] = d <= gate_pct and (calm or not require_calm)
+        if out["passed"]:
             break
-    return {"result": result, "attempts": attempts, "passed": passed}
+    return out
+
+
+def regime(gate: dict) -> dict:
+    """``gated()``'s output minus the ``fn()`` results: the stamps a
+    tool publishes next to the walls they certify."""
+    out = {k: v for k, v in gate.items() if k != "result"}
+    out["attempts"] = [{k: v for k, v in a.items() if k != "result"}
+                       for a in gate["attempts"]]
+    return out
+
+
+def rep(spark, qs: dict, name: str, sf_dir: str) -> tuple[float, float]:
+    """One cold rep of registry query ``name``: release the campaign
+    caches it declares cold (``operators.COLD_TAGS``), build it, run it
+    into the ``noop`` sink. Returns ``(construct_s, exec_s)``."""
+    release_for(spark, name)
+    t0 = time.time()
+    df = qs[name](spark, sf_dir)
+    t1 = time.time()
+    df.write.format("noop").mode("overwrite").save()
+    return t1 - t0, time.time() - t1

@@ -143,7 +143,7 @@ def main() -> int:
         LSH_BUCKET_CAP, lsh_hot_buckets)
     from mqtt_influx_storage_service_spark.session import get_spark
 
-    from bench import _canary
+    from tools.regimestamp import canary
 
     spark = get_spark("stress_100x")
     qs = all_queries()
@@ -155,7 +155,7 @@ def main() -> int:
         # fixed-work canary stamp makes the curve reproducible (the
         # bench.py discipline)
         "reps": 2,
-        "canary_start_sec": round(_canary(spark), 3),
+        "canary_start_sec": round(canary(spark), 3),
         "timings": {},
         "ratios_100x_over_10x": {},
     }
@@ -215,7 +215,7 @@ def main() -> int:
                 sum(s * s for s in sizes) / float(n_vec) ** 2, 5),
         }
     curve["ivf_pair_audit_curve"] = audit
-    curve["canary_end_sec"] = round(_canary(spark), 3)
+    curve["canary_end_sec"] = round(canary(spark), 3)
 
     results = {}
     if os.path.exists(OUT):

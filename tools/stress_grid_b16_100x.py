@@ -151,8 +151,7 @@ def main() -> int:
 
     g = RS.gated(spark, gate_check)
     section["gate_check"] = g["result"]
-    section["gate_check_regime"] = {
-        "attempts": g["attempts"], "passed": g["passed"]}
+    section["gate_check_regime"] = RS.regime(g)
     _flush()
 
     saved = DD.VERIFY_GRID_MIN_MULT
@@ -162,9 +161,7 @@ def main() -> int:
     finally:
         DD.VERIFY_GRID_MIN_MULT = saved
     section["forced"] = f["result"]
-    section["forced_regime"] = {
-        "attempts": f["attempts"], "passed": f["passed"],
-        "min_mult_override": 48}
+    section["forced_regime"] = {**RS.regime(f), "min_mult_override": 48}
     _flush()
 
     # LAST (it can kill the local JVM): the per-pair plan at the
@@ -181,8 +178,7 @@ def main() -> int:
         pp = RS.gated(spark, perpair_default, max_attempts=2)
         section["perpair_default_conf"] = pp["result"]
         section["perpair_default_conf_regime"] = {
-            "attempts": pp["attempts"], "passed": pp["passed"],
-            "min_mult_override": 10**9,
+            **RS.regime(pp), "min_mult_override": 10**9,
             "note": "per-pair verify, 32 shuffle partitions — "
                     "apples-to-apples against grid_verify_100x's "
                     "b=8 grid rows"}

@@ -165,8 +165,7 @@ def main() -> int:
     gate = RS.gated(spark, run_family)
     section = gate["result"]
     section["regime"] = {
-        "attempts": gate["attempts"],
-        "passed": gate["passed"],
+        **RS.regime(gate),
         "note": "walls published only from the gated window; r13's "
                 "claim was min-of-runs on a degrading box "
                 "(wall_history_note, STRESS_r13)",

@@ -225,15 +225,7 @@ def main() -> int:
         "lineitem_rows": 600000 * args.scale,
         "reps": args.reps,
         "heap": args.mem,
-        "gate": {
-            "passed": gated["passed"],
-            "attempts": [
-                {"drift_pct": a["drift_pct"], "calm": a["calm"],
-                 "start_band": a["start"]["band"],
-                 "end_band": a["end"]["band"]}
-                for a in gated["attempts"]
-            ],
-        },
+        "gate": regimestamp.regime(gated),
         **gated["result"],
     }
     try:
