@@ -682,7 +682,7 @@ class _Parser:
     def _opt_from_multi(self):
         """SHOW/DROP SERIES ``FROM``: a bare name, a ``/regex/``, or a
         comma list of either (the SELECT path's source grammar) —
-        returns ``None`` or a list of ``str | Rgx``."""
+        returns ``None`` or a list of ``Str | Rgx``."""
         if not self.kw("FROM"):
             return None
         items = [self._from_item()]
@@ -697,7 +697,7 @@ class _Parser:
         t = self.next()
         if t.kind != "ident":
             raise InfluxQLError(f"expected measurement at {t.pos}")
-        return t.text
+        return Str(t.text)
 
     def _select(self) -> Select:
         fields = [self._field()]
@@ -1007,37 +1007,73 @@ RAW_GLOBAL_WINDOW_MAX = 5_000_000
 # on the driver at construction (mirrors InfluxDB's in-memory series
 # index, influx_service.py:183-197 layouts). At 100 TB with millions of
 # series that collect is a driver-memory bottleneck, so the probe is
-# BOUNDED: distinct().limit(MAX+1) — Spark stops the scan early — and
-# above the cap construction refuses with the same actionable error
-# shape as RAW_GLOBAL_WINDOW_MAX (feed the index from the maintained
-# series-catalog table instead of an ad-hoc scan).
+# streaming.ingest.bounded_distinct, and above the cap construction
+# refuses with the same actionable error shape as RAW_GLOBAL_WINDOW_MAX
+# (feed the index from the maintained series-catalog table instead of
+# an ad-hoc scan). The wide catalog's field list is a pivot's columns,
+# so it takes the pivot's own cap, WIDE_VIEW_MAX_FIELDS.
 CATALOG_MAX_SERIES = 100_000
 
 
-def _bounded_index(
-    spark: SparkSession, points_dir: str, col: str, what: str
-) -> list[str]:
-    rows = (
-        spark.read.parquet(points_dir)
-        .select(col)
-        .distinct()
-        .limit(CATALOG_MAX_SERIES + 1)
-        .collect()
-    )
-    if len(rows) > CATALOG_MAX_SERIES:
-        raise InfluxQLError(
-            f"catalog construction over {points_dir!r} found more than "
-            f"{CATALOG_MAX_SERIES} distinct {what}; a driver-side "
-            "measurement index at that cardinality is a memory hazard — "
-            "bind the lake through a maintained series catalog (pass "
-            "the names=/devices=/fields= constructor overrides, fed "
-            "from operators/timeseries.py::ts_series_catalog) or raise "
-            "CATALOG_MAX_SERIES deliberately"
-        )
-    return sorted(r[0] for r in rows)
+class _PointsLake:
+    """The one reader of the points lake ``streaming/ingest.py::
+    to_points`` writes, shared by the narrow and wide catalogs. The
+    schema comes from the writer (``to_points`` over an empty frame,
+    no Spark job), so building a statement infers nothing; the file
+    listing still runs per statement, so micro-batches that land after
+    construction stay visible. ``load``/``load_many`` filter the
+    catalog's ``series_col`` and hand the points to ``_frame``."""
+
+    def __init__(self, spark: SparkSession, points_dir: str):
+        # imported here: streaming/__init__ -> cq -> this module
+        from ..streaming.ingest import MQTT_SCHEMA, to_points
+
+        self.points_dir = points_dir
+        self._lake_schema = to_points(
+            spark.createDataFrame([], MQTT_SCHEMA)
+        ).schema
+
+    def _read(self, spark: SparkSession) -> DataFrame:
+        return spark.read.schema(self._lake_schema).parquet(self.points_dir)
+
+    def _index(
+        self, spark: SparkSession, given: list[str] | None, col: str,
+        what: str, cap: int,
+    ) -> list[str]:
+        """``given`` sorted — the catalog-fed override (the 100-TB path:
+        ts_series_catalog output or any curated list), no probe — else
+        the bounded distinct of ``col`` over the lake."""
+        if given is not None:
+            return sorted(given)
+        from ..streaming.ingest import bounded_distinct
+
+        vals = bounded_distinct(self._read(spark), col, cap, InfluxQLError(
+            f"catalog construction over {self.points_dir!r} found more "
+            f"than {cap} distinct {what}; a driver-side measurement index "
+            "at that cardinality is a memory hazard — bind the lake "
+            "through a maintained series catalog (pass the names=/"
+            "devices=/fields= constructor overrides, fed from "
+            "operators/timeseries.py::ts_series_catalog) or raise "
+            "CATALOG_MAX_SERIES (series, devices) or WIDE_VIEW_MAX_FIELDS "
+            "(transducers) deliberately"
+        ))
+        # a NULL device or transducer (a short topic that skipped
+        # split_malformed) names nothing a statement can address
+        return [v for v in vals if v is not None]
+
+    def measurement_names(self) -> list[str]:
+        return list(self._names)
+
+    def load(self, spark: SparkSession, name: str) -> DataFrame:
+        series = F.col(self.schema.series_col)
+        return self._frame(self._read(spark).filter(series == name))
+
+    def load_many(self, spark: SparkSession, names: list[str]) -> DataFrame:
+        series = F.col(self.schema.series_col)
+        return self._frame(self._read(spark).filter(series.isin(names)))
 
 
-class PointsCatalog:
+class PointsCatalog(_PointsLake):
     """InfluxQL binding for the engine's OWN ingested narrow points
     table (``streaming/ingest.py::to_points`` output) — the reference
     loop closed end-to-end: MQTT → ingest → lake → InfluxQL. The
@@ -1060,35 +1096,25 @@ class PointsCatalog:
         points_dir: str,
         names: list[str] | None = None,
     ):
-        self.points_dir = points_dir
+        super().__init__(spark, points_dir)
         self.schema = MeasurementSchema(
             tags=[],
             fields=["value"],
             tiebreak="pid",
             series_col="series_id",
         )
-        # `names`: the 100-TB path — feed the measurement index from
-        # the maintained series catalog (ts_series_catalog output or
-        # any curated list) instead of an ad-hoc scan; the bounded
-        # probe below is the convenience path for small lakes.
-        self._names = (
-            sorted(names)
-            if names is not None
-            else _bounded_index(spark, points_dir, "series_id", "series")
+        self._names = self._index(
+            spark, names, "series_id", "series", CATALOG_MAX_SERIES
         )
 
-    def measurement_names(self) -> list[str]:
-        return list(self._names)
-
-    def _load(self, spark: SparkSession, pred: Column) -> DataFrame:
-        df = spark.read.parquet(self.points_dir).filter(pred)
+    def _frame(self, pts: DataFrame) -> DataFrame:
         # deterministic per-row tiebreak: the row's full content hash
         pid = F.xxhash64(
             "series_id", "ts", "value_type",
             F.coalesce(F.col("value_str"), F.lit("")),
             F.coalesce(F.col("value_double"), F.lit(0.0)),
         )
-        return df.select(
+        return pts.select(
             F.col("series_id").alias("measurement"),
             F.col("ts").alias("time"),
             F.col("value_double").alias("value"),
@@ -1096,21 +1122,18 @@ class PointsCatalog:
             "series_id",
         )
 
-    def load(self, spark: SparkSession, name: str) -> DataFrame:
-        return self._load(spark, F.col("series_id") == name)
 
-    def load_many(self, spark: SparkSession, names: list[str]) -> DataFrame:
-        return self._load(spark, F.col("series_id").isin(names))
-
-
-class WidePointsCatalog:
+class WidePointsCatalog(_PointsLake):
     """The reference's SECOND stored layout (influx_service.py:
     191-197, the 'organized' form): measurement = ``device_id``, one
-    FIELD per transducer. Bound as a derived pivot over the same
-    narrow points lake — never a second physical copy (the
-    ``ingest.wide_view`` stance). Field names are the transducer
-    universe read once at construction; ``series_col='device_id'``
-    keeps raw transforms partitioned (each device is one series).
+    FIELD per transducer. Bound as ``ingest.wide_view``'s pivot over
+    the same narrow points lake — never a second physical copy. Field
+    names are the transducer universe read once at construction, and
+    ``wide_view``'s collision guards run on them there: a transducer
+    that folds onto a fixed column (a device publishing 'TS') refuses
+    construction instead of failing every statement; ``fields=`` is
+    the remedy. ``series_col='device_id'`` keeps raw transforms
+    partitioned (each device is one series).
     """
 
     def __init__(
@@ -1120,50 +1143,35 @@ class WidePointsCatalog:
         devices: list[str] | None = None,
         fields: list[str] | None = None,
     ):
-        self.points_dir = points_dir
-        # same catalog-fed override as PointsCatalog: pass the device /
-        # transducer universes from maintained metadata to skip the
-        # bounded construction probe entirely.
-        self._devices = (
-            sorted(devices)
-            if devices is not None
-            else _bounded_index(spark, points_dir, "device_id", "devices")
+        from ..streaming import ingest
+
+        super().__init__(spark, points_dir)
+        self._names = self._index(
+            spark, devices, "device_id", "devices", CATALOG_MAX_SERIES
         )
-        self._fields = (
-            sorted(fields)
-            if fields is not None
-            else _bounded_index(spark, points_dir, "transducer", "transducers")
+        fields = self._index(
+            spark, fields, "transducer", "transducers",
+            ingest.WIDE_VIEW_MAX_FIELDS,
         )
+        ingest.validate_wide_fields(fields)
         self.schema = MeasurementSchema(
             tags=[],
-            fields=list(self._fields),
+            fields=fields,
             tiebreak="pid",
             series_col="device_id",
         )
 
-    def measurement_names(self) -> list[str]:
-        return list(self._devices)
+    def _frame(self, pts: DataFrame) -> DataFrame:
+        from ..streaming.ingest import wide_view
 
-    def _load(self, spark: SparkSession, pred: Column) -> DataFrame:
-        pts = spark.read.parquet(self.points_dir).filter(pred)
-        wide = (
-            pts.groupBy("device_id", "ts")
-            .pivot("transducer", self._fields)
-            .agg(F.first("value_double"))
-        )
-        return wide.select(
+        fields = self.schema.fields
+        return wide_view(pts, fields).select(
             F.col("device_id").alias("measurement"),
             F.col("ts").alias("time"),
-            *self._fields,
+            *fields,
             F.xxhash64("device_id", "ts").alias("pid"),
             "device_id",
         )
-
-    def load(self, spark: SparkSession, name: str) -> DataFrame:
-        return self._load(spark, F.col("device_id") == name)
-
-    def load_many(self, spark: SparkSession, names: list[str]) -> DataFrame:
-        return self._load(spark, F.col("device_id").isin(names))
 
 
 class EventsCatalog:
@@ -2930,25 +2938,12 @@ def influxql_into(
 
 
 def _show_measurements(cat, frm) -> list[str]:
-    """Resolve a SHOW/DROP SERIES FROM clause (None, name, /regex/, or
-    a comma list) to concrete measurement names, in catalog order for
-    regexes — the same resolution the SELECT path applies."""
-    known = cat.measurement_names()
+    """Resolve a SHOW/DROP SERIES FROM clause (absent, or a list of
+    names and /regex/es) to concrete measurement names: every catalog
+    name when FROM is absent, else the SELECT path's resolution."""
     if frm is None:
-        return list(known)
-    items = frm if isinstance(frm, list) else [frm]
-    out: list[str] = []
-    for item in items:
-        if isinstance(item, Rgx):
-            rx = re.compile(item.pattern)
-            out.extend(n for n in known if rx.search(n))
-        else:
-            out.append(item)
-    seen: set[str] = set()
-    uniq = [n for n in out if not (n in seen or seen.add(n))]
-    if not uniq:
-        raise InfluxQLError("no measurement matched FROM clause")
-    return uniq
+        return list(cat.measurement_names())
+    return resolve_from(cat, frm)[0]
 
 
 def resolve_from(cat, measurements: list) -> tuple[list[str], bool]:
@@ -3220,11 +3215,7 @@ def drop_series_condition(stmt: DropSeries, catalog=None) -> Column:
         names = (
             _show_measurements(catalog, stmt.measurement)
             if catalog is not None
-            else [m for m in (
-                stmt.measurement
-                if isinstance(stmt.measurement, list)
-                else [stmt.measurement]
-            ) if not isinstance(m, Rgx)]
+            else [m.value for m in stmt.measurement if isinstance(m, Str)]
         )
         if not names:
             raise InfluxQLError(

@@ -664,23 +664,28 @@ def _scored_shingle_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All pairs with Jaccard >= threshold among docs sharing at least
-    one under-cap blocking shingle: capped candidate generation
-    (:func:`_shingle_candidates`) + EXACT verification against the
-    full shingle arrays — the same candidates→verify architecture as
-    :func:`dedup_minhash_lsh`, so the pair stage is bounded by
-    SHINGLE_DF_CAP²/2 per shingle key instead of Σ c(s)².
+def _pair_intersections(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_a, doc_b, n_inter, n_a, n_b) for every candidate pair, with
+    n_inter = |shingles(A) ∩ shingles(B)| — the one home of the r15
+    exact-count fork that :func:`_jaccard_pairs` and
+    :func:`dedup_containment` score.
 
-    n_inter = ``array_intersect`` on the precomputed 60-bit HASH
-    arrays (``shingles_h`` — 8-byte elements, not ~25-byte strings:
-    the intersect leg measured ~4x cheaper and the verify shuffle
-    ~3x lighter): exactly the keyed count the DuckDB twin computes.
-    A cross-shingle collision would over-count n_inter by 1 with
-    P ≈ n_shingles²/2⁶¹ per pair (~10⁻¹² at 1k-shingle docs) — the
-    same accepted exposure as every signature pipeline here. The
-    verify join shuffles hash arrays for candidate-many rows only —
-    collision-bounded, never corpus².
+    When the campaign's measured df histogram has NO over-cap shingle
+    (:func:`_corpus_has_overcap` — true at every fixture SF, max df
+    25), the candidate stage's co-occurrence count already IS n_inter
+    for every pair, so the verify join is a re-derivation and is
+    skipped (see :func:`_scored_shingle_pairs` for the proof
+    obligations). Boilerplate corpora — where the rescue tier samples
+    buckets and cooc undercounts — keep the full candidates→array-
+    verify plan, including the grid above the gate: ``array_intersect``
+    on the precomputed 60-bit HASH arrays (``shingles_h``, 8-byte
+    elements: the intersect leg measured ~4x cheaper and the verify
+    shuffle ~3x lighter than strings), exactly the keyed count the
+    DuckDB twins compute. A cross-shingle collision would over-count
+    n_inter by 1 with P ≈ n_shingles²/2⁶¹ per pair (~10⁻¹² at
+    1k-shingle docs) — the same accepted exposure as every signature
+    pipeline here. The verify join shuffles hash arrays for
+    candidate-many rows only — collision-bounded, never corpus².
 
     The verify joins are strategy-PINNED (see :func:`_verify_joined`):
     Catalyst's static size estimate for the post-aggregate candidate
@@ -688,32 +693,11 @@ def _jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the resulting static BroadcastExchange of the corpus-sized
     shingle table killed the 8 GiB driver at the 100x stress corpus
     (AQE cannot demote a statically planned broadcast whose input has
-    no shuffle stage to measure — the r8 minhash run survived only
-    because the persisted shingle cache happened to materialize first).
-
-    r15 exact-count fork: when the campaign's measured df histogram has
-    NO over-cap shingle (:func:`_corpus_has_overcap` — true at every
-    fixture SF, max df 25), the candidate stage's co-occurrence count
-    already equals n_inter for every pair, so the whole verify join is
-    a re-derivation and is skipped (see :func:`_scored_shingle_pairs`
-    for the proof obligations). Boilerplate corpora — where the rescue
-    tier samples buckets and cooc undercounts — keep this full
-    candidates→array-verify plan, including the grid above the gate.
-    """
+    no shuffle stage to measure)."""
     if not _corpus_has_overcap(spark, sf_dir):
-        p = _scored_shingle_pairs(spark, sf_dir)
-        return (
-            p.withColumn("n_inter", F.col("cooc").cast("int"))
-            .withColumn(
-                "jaccard",
-                F.round(
-                    F.col("n_inter")
-                    / (F.col("n_a") + F.col("n_b") - F.col("n_inter")),
-                    6,
-                ),
-            )
-            .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-            .select("doc_a", "doc_b", "n_inter", "n_a", "n_b", "jaccard")
+        return _scored_shingle_pairs(spark, sf_dir).select(
+            "doc_a", "doc_b", F.col("cooc").cast("int").alias("n_inter"),
+            "n_a", "n_b",
         )
     ds = _doc_shingles(spark, sf_dir)
     sa = ds.select(
@@ -726,12 +710,28 @@ def _jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("shingles_h").alias("sh_b"),
         F.col("n_shingles").alias("n_b"),
     )
-    jac = (
-        _verify_joined(
-            _shingle_candidates(spark, sf_dir), sa, sb,
-            spark=spark, sf_dir=sf_dir, tag="shingle",
-        )
-        .withColumn("n_inter", F.size(F.array_intersect("sh_a", "sh_b")))
+    return _verify_joined(
+        _shingle_candidates(spark, sf_dir), sa, sb,
+        spark=spark, sf_dir=sf_dir, tag="shingle",
+    ).select(
+        "doc_a", "doc_b",
+        F.size(F.array_intersect("sh_a", "sh_b")).alias("n_inter"),
+        "n_a", "n_b",
+    )
+
+
+def _jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """All pairs with Jaccard >= threshold among docs sharing at least
+    one under-cap blocking shingle: capped candidate generation
+    (:func:`_shingle_candidates`) + EXACT verification against the
+    full shingle arrays — the same candidates→verify architecture as
+    :func:`dedup_minhash_lsh`, so the pair stage is bounded by
+    SHINGLE_DF_CAP²/2 per shingle key instead of Σ c(s)².
+    n_inter comes from :func:`_pair_intersections`, which holds the
+    r15 exact-count fork.
+    """
+    return (
+        _pair_intersections(spark, sf_dir)
         .withColumn(
             "jaccard",
             F.round(
@@ -740,7 +740,6 @@ def _jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
-    return jac.select("doc_a", "doc_b", "n_inter", "n_a", "n_b", "jaccard")
 
 
 DEDUP_NGRAM_JACCARD_SQL = f"""
@@ -2219,67 +2218,19 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle key (never Σ c(s)², never corpus²) and the shingle table is
     the same persisted campaign artifact.
 
-    r15 exact-count fork (same gate + proof as :func:`_jaccard_pairs`):
-    on corpora with no over-cap shingle the candidate co-occurrence
-    count IS n_inter, so the array-verify join is skipped and both
-    directions explode straight off the scored pair relation.
+    Both directions explode off :func:`_pair_intersections`, the
+    relation that holds the r15 exact-count fork shared with the
+    Jaccard pipeline.
     """
-    if not _corpus_has_overcap(spark, sf_dir):
-        p = _scored_shingle_pairs(spark, sf_dir)
-        both = p.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("doc_a").alias("doc_a"),
-                        F.col("doc_b").alias("doc_b"),
-                        F.col("cooc").cast("int").alias("n_inter"),
-                        F.col("n_a").alias("n_a"),
-                    ),
-                    F.struct(
-                        F.col("doc_b").alias("doc_a"),
-                        F.col("doc_a").alias("doc_b"),
-                        F.col("cooc").cast("int").alias("n_inter"),
-                        F.col("n_b").alias("n_a"),
-                    ),
-                )
-            ).alias("e")
-        ).select("e.*")
-        return (
-            both.withColumn(
-                "containment", F.round(F.col("n_inter") / F.col("n_a"), 6)
-            )
-            .filter(F.col("containment") >= CONTAINMENT_THRESHOLD)
-            .select("doc_a", "doc_b", "n_inter", "n_a", "containment")
-        )
-    ds = _doc_shingles(spark, sf_dir)
-    sa = ds.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("shingles_h").alias("sh_a"),
-        F.col("n_shingles").alias("na"),
-    )
-    sb = ds.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("shingles_h").alias("sh_b"),
-        F.col("n_shingles").alias("nb"),
-    )
-    und = _verify_joined(
-        _shingle_candidates(spark, sf_dir), sa, sb,
-        spark=spark, sf_dir=sf_dir, tag="shingle",
-    ).withColumn("n_inter", F.size(F.array_intersect("sh_a", "sh_b")))
-    both = und.select(
+    both = _pair_intersections(spark, sf_dir).select(
         F.explode(
             F.array(
-                F.struct(
-                    F.col("doc_a").alias("doc_a"),
-                    F.col("doc_b").alias("doc_b"),
-                    F.col("n_inter").alias("n_inter"),
-                    F.col("na").alias("n_a"),
-                ),
+                F.struct("doc_a", "doc_b", "n_inter", "n_a"),
                 F.struct(
                     F.col("doc_b").alias("doc_a"),
                     F.col("doc_a").alias("doc_b"),
-                    F.col("n_inter").alias("n_inter"),
-                    F.col("nb").alias("n_a"),
+                    F.col("n_inter"),
+                    F.col("n_b").alias("n_a"),
                 ),
             )
         ).alias("e")

@@ -266,15 +266,31 @@ def compact(spark: SparkSession, points_dir: str, ingest_date: str,
     )
 
 
-# wide_view's dynamic-pivot probe cap (VERDICT r9 #3): .pivot() with no
-# value list collects every distinct transducer to the DRIVER and mints
-# one output column each — a schema, not a result, so it must stay
-# driver-small. Same cap-and-refuse idiom as
-# functions/influxql.py::_bounded_index (CATALOG_MAX_SERIES).
+# wide_view's transducer cap (VERDICT r9 #3): the field list of a
+# pivot is a schema, not a result, so it must stay driver-small. The
+# InfluxQL wide catalog probes its fields under the same cap.
 WIDE_VIEW_MAX_FIELDS = 10_000
 
 
-def _validate_wide_fields(fields: list[str | None]) -> None:
+def bounded_distinct(
+    df: DataFrame, col: str, cap: int, refusal: Exception
+) -> list[str | None]:
+    """The one driver-side distinct probe over the points lake (the
+    wide_view transducer list, the InfluxQL catalogs' measurement,
+    device and field indexes): ``distinct().limit(cap + 1)``, so Spark
+    stops the scan early, and above ``cap`` values it raises
+    ``refusal``. Sorted and NULL-safe: a NULL (a short data topic
+    parses to a NULL transducer) comes first, the order a dynamic
+    pivot gives its 'null' column, instead of making ``sorted`` throw
+    on a None/str comparison."""
+    vals = [r[0] for r in df.select(col).distinct().limit(cap + 1).collect()]
+    if len(vals) > cap:
+        raise refusal
+    named = sorted(v for v in vals if v is not None)
+    return named if len(named) == len(vals) else [None, *named]
+
+
+def validate_wide_fields(fields: list[str | None]) -> None:
     """Refuse a pivot field list that mints colliding columns — runs on
     BOTH the auto-discovered list and an explicitly passed ``fields=``
     (ADVICE r13: the explicit path used to skip these and fail later
@@ -328,46 +344,28 @@ def wide_view(points: DataFrame, fields: list[str] | None = None) -> DataFrame:
     Pass ``fields`` (the transducer names to become columns) on any
     real lake — an explicit list skips the driver-side distinct probe
     entirely, exactly how ``WidePointsCatalog`` feeds its bounded
-    field list (functions/influxql.py:1151). Without it, the probe is
-    BOUNDED: distinct().limit(MAX+1) so Spark stops the scan early,
-    and above WIDE_VIEW_MAX_FIELDS the call refuses with a pointer at
-    the catalog path instead of minting a million-column schema on the
-    driver."""
+    field list. Without it, the probe is :func:`bounded_distinct`
+    under WIDE_VIEW_MAX_FIELDS, refusing with a pointer at the catalog
+    path instead of minting a million-column schema on the driver."""
     if fields is None:
-        rows = (
-            points.select("transducer")
-            .distinct()
-            .limit(WIDE_VIEW_MAX_FIELDS + 1)
-            .collect()
-        )
-        if len(rows) > WIDE_VIEW_MAX_FIELDS:
-            raise ValueError(
+        fields = bounded_distinct(
+            points, "transducer", WIDE_VIEW_MAX_FIELDS, ValueError(
                 f"wide_view found more than {WIDE_VIEW_MAX_FIELDS} distinct "
                 "transducers; a pivot at that width is a driver/schema "
                 "hazard — pass fields= explicitly (fed from a maintained "
                 "series catalog, e.g. operators/timeseries.py::"
                 "ts_series_catalog, the WidePointsCatalog route) or raise "
                 "WIDE_VIEW_MAX_FIELDS deliberately"
-            )
-        # null-safe: a short data topic parses to a NULL transducer
-        # (try_element_at) and can reach an un-quarantined points frame.
-        # The dynamic pivot this probe replaced sorted nulls first and
-        # minted a 'null' column; keep that contract instead of letting
-        # sorted() throw on a None/str comparison.
-        vals = [r[0] for r in rows]
-        fields = sorted(v for v in vals if v is not None)
-        if len(fields) < len(vals):
-            # A NULL transducer pivots to a column literally named
-            # 'null' — keep the dynamic pivot's contract (nulls sorted
-            # first) by prepending the None slot before validation.
-            fields = [None, *fields]
+            ),
+        )
     # Collision guards (case pairs, fixed 'ts'/'device_id' columns,
     # NULL vs literal-'null') run on the auto-discovered AND the
     # explicitly passed list alike — an explicit list from an external
-    # catalog can carry the same hazards (ADVICE r13); conforming
-    # ingest never produces them (the topic parser lowercases,
-    # reference influx_service.py:139).
-    _validate_wide_fields(fields)
+    # catalog can carry the same hazards (ADVICE r13). Conforming
+    # ingest lowercases (reference influx_service.py:139), so it never
+    # makes a case pair, but a device that publishes a 'TS' transducer
+    # still folds onto the fixed 'ts' column.
+    validate_wide_fields(fields)
     return (
         points.groupBy("device_id", "ts")
         .pivot("transducer", fields)

@@ -4,6 +4,8 @@ SLIMIT/OFFSET, numeric fill, plan shape)."""
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,6 +17,7 @@ from mqtt_influx_storage_service_spark.functions.influxql import (
     Rgx,
     Select,
     Show,
+    Str,
     influxql,
     parse,
 )
@@ -59,15 +62,15 @@ def test_parse_durations_and_nested_calls():
 def test_parse_show_variants():
     assert parse("SHOW MEASUREMENTS") == Show("measurements")
     assert parse("SHOW TAG KEYS") == Show("tag keys", None, None)
-    assert parse("SHOW FIELD KEYS FROM cpu") == Show("field keys", None, ["cpu"])
+    assert parse("SHOW FIELD KEYS FROM cpu") == Show("field keys", None, [Str("cpu")])
     st = parse("SHOW TAG VALUES FROM cpu WITH KEY = host")
-    assert st == Show("tag values", "host", ["cpu"])
+    assert st == Show("tag values", "host", [Str("cpu")])
     assert parse("SHOW DATABASES") == Show("databases")
     st = parse("SHOW RETENTION POLICIES ON db")
     assert st == Show("retention policies", on_database="db")
     st = parse("SHOW SERIES FROM /cpu.*/, mem")
     assert st.from_measurement[0].pattern == "cpu.*"
-    assert st.from_measurement[1] == "mem"
+    assert st.from_measurement[1] == Str("mem")
     # the cardinality family: plain = HLL estimate, EXACT = exact
     assert parse("SHOW MEASUREMENT CARDINALITY") == Show(
         "measurement cardinality"
@@ -76,12 +79,12 @@ def test_parse_show_variants():
         "series cardinality", exact=True
     )
     assert parse("SHOW TAG KEY EXACT CARDINALITY FROM cpu") == Show(
-        "tag key cardinality", None, ["cpu"], exact=True
+        "tag key cardinality", None, [Str("cpu")], exact=True
     )
     st = parse("SHOW TAG VALUES EXACT CARDINALITY FROM cpu WITH KEY = host")
-    assert st == Show("tag values cardinality", "host", ["cpu"], exact=True)
+    assert st == Show("tag values cardinality", "host", [Str("cpu")], exact=True)
     assert parse("SHOW FIELD KEY CARDINALITY FROM cpu") == Show(
-        "field key cardinality", None, ["cpu"]
+        "field key cardinality", None, [Str("cpu")]
     )
 
 
@@ -1644,6 +1647,122 @@ def test_catalog_constructor_series_cap(spark, tmp_path, monkeypatch):
         spark, out, devices=["dev0"], fields=["temp"]
     )
     assert wfed.measurement_names() == ["dev0"]
+
+
+def _ingested_lake(spark, out, topics, minutes=range(5)):
+    """Append one ``to_points`` batch to the lake at ``out``: a float
+    reading per minute in ``minutes`` on every topic in ``topics``."""
+    from mqtt_influx_storage_service_spark.streaming.ingest import to_points
+
+    msgs = spark.createDataFrame(
+        [
+            (f"2024-01-01 00:{m:02d}:00", t, str(20.0 + m))
+            for t in topics
+            for m in minutes
+        ],
+        "ts string, topic string, payload string",
+    ).select(F.col("ts").cast("timestamp"), "topic", "payload")
+    to_points(msgs).write.mode("append").partitionBy("ingest_date").parquet(out)
+
+
+def _build_without_jobs(spark, out, q, cat):
+    """Build ``q`` over ``cat`` under a fresh job group, assert the
+    build ran no Spark job, and return the rows it then collects."""
+    sc = spark.sparkContext
+    group = f"iq-build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, q)
+    try:
+        df = influxql(spark, out, q, catalog=cat)
+        assert sc.statusTracker().getJobIdsForGroup(group) == [], q
+        return df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_points_catalogs_build_statements_without_jobs(spark, tmp_path):
+    """The points catalogs read the lake with the schema its writer
+    declares, so building a statement runs no Spark job (no schema
+    inference per statement) — for an aggregate, a raw transform and
+    a /regex/ FROM, on both layouts."""
+    from mqtt_influx_storage_service_spark.functions.influxql import (
+        PointsCatalog,
+        WidePointsCatalog,
+    )
+
+    out = str(tmp_path / "points")
+    _ingested_lake(
+        spark, out,
+        [f"openchirp/device/d{d}/{t}" for d in range(2) for t in ("temp", "hum")],
+    )
+    window = "WHERE time >= '2024-01-01' AND time < '2024-01-02'"
+    for cat, fld, m, rx in [
+        (PointsCatalog(spark, out), "value", "d0_temp", "/^d._temp$/"),
+        (WidePointsCatalog(spark, out), "temp", "d0", "/^d/"),
+    ]:
+        for q in [
+            f"SELECT MEAN({fld}) AS m FROM {m} {window} GROUP BY time(1m)",
+            f"SELECT DIFFERENCE({fld}) AS d FROM {m} {window}",
+            f"SELECT MAX({fld}) AS m FROM {rx} {window}",
+        ]:
+            assert _build_without_jobs(spark, out, q, cat), q
+
+
+def test_points_catalog_sees_batches_landed_after_construction(spark, tmp_path):
+    """The declared-schema read is not a snapshot: the lake is still
+    listed per statement, so a micro-batch appended after the catalog
+    was built is counted by the next statement, on both layouts, and
+    building that statement still runs no job."""
+    from mqtt_influx_storage_service_spark.functions.influxql import (
+        PointsCatalog,
+        WidePointsCatalog,
+    )
+
+    out = str(tmp_path / "points")
+    _ingested_lake(spark, out, ["openchirp/device/d0/temp"])
+    narrow = PointsCatalog(spark, out)
+    wide = WidePointsCatalog(spark, out)
+    window = "WHERE time >= '2024-01-01' AND time < '2024-01-02'"
+
+    def counts():
+        return tuple(
+            _build_without_jobs(spark, out, q, cat)[0].n
+            for q, cat in [
+                (f"SELECT COUNT(value) AS n FROM d0_temp {window}", narrow),
+                (f"SELECT COUNT(temp) AS n FROM d0 {window}", wide),
+            ]
+        )
+
+    assert counts() == (5, 5)
+    _ingested_lake(spark, out, ["openchirp/device/d0/temp"], range(5, 8))
+    assert counts() == (8, 8)
+
+
+def test_wide_catalog_refuses_transducer_colliding_with_ts(spark, tmp_path):
+    """A device that publishes a 'TS' transducer lowercases to 'ts',
+    which folds onto the wide layout's fixed 'ts' column. The wide
+    catalog refuses at construction with wide_view's collision
+    message (instead of failing every later statement with
+    AMBIGUOUS_REFERENCE); the fields= override is the remedy."""
+    from mqtt_influx_storage_service_spark.functions.influxql import (
+        WidePointsCatalog,
+    )
+
+    out = str(tmp_path / "points")
+    _ingested_lake(
+        spark, out,
+        ["openchirp/device/d0/temp", "openchirp/device/d0/hum",
+         "openchirp/device/d1/TS"],
+    )
+    with pytest.raises(ValueError, match="collides with the wide layout's fixed 'ts'"):
+        WidePointsCatalog(spark, out)
+    cat = WidePointsCatalog(spark, out, fields=["hum", "temp"])
+    got = influxql(
+        spark, out,
+        "SELECT MEAN(temp) AS m FROM d0 "
+        "WHERE time >= '2024-01-01' AND time < '2024-01-02'",
+        catalog=cat,
+    ).collect()
+    assert got[0].m == 22.0
 
 
 def test_ta_kernels_match_python_reference_on_random_series(spark, sf_dir):

@@ -22,7 +22,8 @@ a certified calm window. This module is the one home for:
 - the attempt GATE: run the measured section between start/end
   canaries, retry while the window drifted (> GATE_PCT) or sat in
   the degraded band, publish every attempt's stamps either way.
-  bench.py gates its whole suite on drift alone (require_calm=False);
+  bench.py and tools/isolate.py gate on drift alone
+  (require_calm=False); the local[32] stress tools keep the calm gate;
 - the cold REP that bench.py and tools/isolate.py time per query.
 
 Shuffle-byte metrics reproduce byte-identically across all three
