@@ -31,8 +31,8 @@ Supported surface (practical InfluxQL 1.x subset):
 - ``fill(none | null | previous | <number>)`` (needs WHERE time bounds
   on the top-level AND spine)
 - measurement regex ``FROM /re/`` and comma lists (adds a
-  ``measurement`` column; one IN-filtered scan when the catalog
-  supports it)
+  ``measurement`` column; one IN-filtered scan of the catalog's
+  relation)
 - tag/field predicates with ``AND OR ( )``, ``= != <> < <= > >=``,
   regex ``=~ /re/`` / ``!~ /re/``, and ``time`` bounds as timestamp
   strings, exact integer epoch-ns literals (bare or ``ns``-suffixed),
@@ -57,6 +57,7 @@ tiebreak) — all bit-identical across engines (see
 
 from __future__ import annotations
 
+import datetime
 import re
 from dataclasses import dataclass, field as dc_field
 
@@ -978,7 +979,10 @@ def parse_continuous_query(src: str) -> ContinuousQuery:
 
 
 # --------------------------------------------------------------------------
-# Catalog — measurement name → (DataFrame, tags, fields)
+# Catalog — three members: ``schema`` (a MeasurementSchema),
+# ``measurement_names()`` and ``frame(spark)``, one lazy relation of
+# ALL the catalog's points with a ``measurement`` column. The compiler
+# applies the FROM filter (measurement_points); a catalog never does.
 # --------------------------------------------------------------------------
 
 
@@ -1021,8 +1025,9 @@ class _PointsLake:
     schema comes from the writer (``to_points`` over an empty frame,
     no Spark job), so building a statement infers nothing; the file
     listing still runs per statement, so micro-batches that land after
-    construction stay visible. ``load``/``load_many`` filter the
-    catalog's ``series_col`` and hand the points to ``_frame``."""
+    construction stay visible. ``frame`` hands the whole lake to the
+    catalog's ``_frame``; the compiler's measurement filter reaches the
+    parquet scan through its projection (and through the wide pivot)."""
 
     def __init__(self, spark: SparkSession, points_dir: str):
         # imported here: streaming/__init__ -> cq -> this module
@@ -1064,13 +1069,8 @@ class _PointsLake:
     def measurement_names(self) -> list[str]:
         return list(self._names)
 
-    def load(self, spark: SparkSession, name: str) -> DataFrame:
-        series = F.col(self.schema.series_col)
-        return self._frame(self._read(spark).filter(series == name))
-
-    def load_many(self, spark: SparkSession, names: list[str]) -> DataFrame:
-        series = F.col(self.schema.series_col)
-        return self._frame(self._read(spark).filter(series.isin(names)))
+    def frame(self, spark: SparkSession) -> DataFrame:
+        return self._frame(self._read(spark))
 
 
 class PointsCatalog(_PointsLake):
@@ -1174,6 +1174,20 @@ class WidePointsCatalog(_PointsLake):
         )
 
 
+def events_points(ev: DataFrame) -> DataFrame:
+    """events-shaped rows → the catalog layout (measurement, time, tag
+    ``user_id``, field ``value``, tiebreak ``event_id``): the one
+    mapping of the fixture ``events`` table, shared by
+    :class:`EventsCatalog` and the streaming CQ's micro-batches."""
+    return ev.select(
+        F.col("event_type").alias("measurement"),
+        F.col("ts").alias("time"),
+        "user_id",
+        "value",
+        "event_id",
+    )
+
+
 class EventsCatalog:
     """Default binding of the fixture ``events`` table to the InfluxQL
     data model: measurement = ``event_type`` value, ``time`` = ``ts``,
@@ -1195,31 +1209,8 @@ class EventsCatalog:
     def measurement_names(self) -> list[str]:
         return list(self.MEASUREMENTS)
 
-    def load(self, spark: SparkSession, name: str) -> DataFrame:
-        ev = load_table(spark, self.sf_dir, "events")
-        return (
-            ev.filter(F.col("event_type") == name)
-            .select(
-                F.lit(name).alias("measurement"),
-                F.col("ts").alias("time"),
-                "user_id",
-                "value",
-                "event_id",
-            )
-        )
-
-    def load_many(self, spark: SparkSession, names: list[str]) -> DataFrame:
-        """All requested measurements in ONE scan (the compiler prefers
-        this over unioning per-measurement scans: one parquet pass with
-        an IN filter that prunes to the matching partitions)."""
-        ev = load_table(spark, self.sf_dir, "events")
-        return ev.filter(F.col("event_type").isin(names)).select(
-            F.col("event_type").alias("measurement"),
-            F.col("ts").alias("time"),
-            "user_id",
-            "value",
-            "event_id",
-        )
+    def frame(self, spark: SparkSession) -> DataFrame:
+        return events_points(load_table(spark, self.sf_dir, "events"))
 
 
 # --------------------------------------------------------------------------
@@ -1425,8 +1416,6 @@ def _eval_time(v, now) -> "datetime.datetime":
     the compiler's injectable clock), and ``now() ± <dur>``
     arithmetic. The result is embedded as a LITERAL in the plan, so
     relative bounds still push down into the scan."""
-    import datetime
-
     if isinstance(v, Str):
         try:
             return datetime.datetime.fromisoformat(v.value)
@@ -1484,7 +1473,7 @@ class _Compiler:
                 raise InfluxQLError("a subquery must be the only FROM source")
             return self._subquery_source(ms[0]), False
         names, multi = resolve_from(self.catalog, ms)
-        return _union_measurements(self.spark, self.catalog, names), multi
+        return measurement_points(self.spark, self.catalog, names), multi
 
     def _subquery_source(self, inner_stmt: Select) -> DataFrame:
         """Compile the inner SELECT and present its result as this
@@ -2756,6 +2745,51 @@ def _explain_df(spark: SparkSession, cat, stmt: Explain, now) -> DataFrame:
     return spark.createDataFrame(rows, "line int, plan string")
 
 
+# Statements that change state; the read entry points refuse them.
+_MANAGEMENT_DDL = (
+    RetentionPolicyStmt,
+    CreateDatabase,
+    DropSeries,
+    KillQuery,
+    ContinuousQuery,
+    DropContinuousQuery,
+    DropDatabase,
+    DropShard,
+)
+
+
+def _clock(now):
+    """The injectable ``now``: a datetime, or an ISO string parsed to
+    one."""
+    return datetime.datetime.fromisoformat(now) if isinstance(now, str) else now
+
+
+def _read_statement(spark: SparkSession, cat, stmt, now, meta) -> DataFrame:
+    """Compile one parsed read statement (EXPLAIN, SHOW, SELECT) — the
+    dispatch :func:`influxql` and :func:`influxql_batch` share. A
+    DELETE/DROP or management DDL is refused with a pointer at the
+    entry point that applies it."""
+    if isinstance(stmt, Delete):
+        raise InfluxQLError(
+            "DELETE/DROP is not a read statement — apply it with "
+            "influxql_delete against a SnapshotTable"
+        )
+    if isinstance(stmt, _MANAGEMENT_DDL):
+        raise InfluxQLError(
+            "management DDL is not a read statement — apply it with "
+            "influxql_admin (policies/databases/CQs/KILL QUERY) or "
+            "influxql_drop_series"
+        )
+    if isinstance(stmt, Explain):
+        # ANALYZE executes eagerly — the one statement that is not lazy
+        return _explain_df(spark, cat, stmt, now)
+    if isinstance(stmt, Show):
+        if stmt.what == "queries":
+            return show_queries(spark)
+        return _compile_show(spark, cat, stmt, meta=meta, now=now)
+    return _Compiler(spark, cat, stmt, now=now).compile()
+
+
 def influxql(
     spark: SparkSession, sf_dir: str, query: str, catalog=None, now=None,
     meta=None,
@@ -2768,37 +2802,8 @@ def influxql(
     implicitly) so relative-time queries stay deterministic: tests,
     oracles, and a batch campaign all evaluate one fixed instant.
     """
-    import datetime
-
-    if isinstance(now, str):
-        now = datetime.datetime.fromisoformat(now)
     cat = catalog or EventsCatalog(sf_dir)
-    stmt = parse(query)
-    if isinstance(stmt, Explain):
-        return _explain_df(spark, cat, stmt, now)
-    if isinstance(stmt, Show):
-        if stmt.what == "queries":
-            return show_queries(spark)
-        return _compile_show(spark, cat, stmt, meta=meta, now=now)
-    if isinstance(
-        stmt,
-        (
-            RetentionPolicyStmt,
-            CreateDatabase,
-            DropSeries,
-            KillQuery,
-            ContinuousQuery,
-            DropContinuousQuery,
-            DropDatabase,
-            DropShard,
-        ),
-    ):
-        raise InfluxQLError(
-            "management DDL is not a read statement — apply it with "
-            "influxql_admin (policies/databases/CQs/KILL QUERY) or "
-            "influxql_drop_series"
-        )
-    return _Compiler(spark, cat, stmt, now=now).compile()
+    return _read_statement(spark, cat, parse(query), _clock(now), meta)
 
 
 def influxql_batch(
@@ -2807,50 +2812,15 @@ def influxql_batch(
     """Compile a ``;``-separated statement batch — the shape InfluxDB's
     ``/query`` endpoint accepts in one ``q=`` parameter — returning one
     lazy DataFrame per statement, in order. Read statements only
-    (SELECT/SHOW); a DELETE/DROP in a batch is refused with a pointer
-    at :func:`influxql_delete`, which needs a mutable table, not a
-    fixture dir."""
-    import datetime
-
-    if isinstance(now, str):
-        now = datetime.datetime.fromisoformat(now)
+    (SELECT/SHOW/EXPLAIN); a DELETE/DROP in a batch is refused with a
+    pointer at :func:`influxql_delete`, which needs a mutable table,
+    not a fixture dir."""
     cat = catalog or EventsCatalog(sf_dir)
-    out: list[DataFrame] = []
-    for stmt in parse_all(query):
-        if isinstance(stmt, Delete):
-            raise InfluxQLError(
-                "DELETE/DROP in a batch is not a read statement — apply it "
-                "with influxql_delete against a SnapshotTable"
-            )
-        if isinstance(
-            stmt,
-            (
-                RetentionPolicyStmt,
-                CreateDatabase,
-                DropSeries,
-                KillQuery,
-                ContinuousQuery,
-                DropContinuousQuery,
-                DropDatabase,
-                DropShard,
-            ),
-        ):
-            raise InfluxQLError(
-                "management DDL in a batch is not a read statement — "
-                "apply it with influxql_admin or influxql_drop_series"
-            )
-        if isinstance(stmt, Explain):
-            # ANALYZE executes eagerly — the one batch member that is
-            # not lazy
-            out.append(_explain_df(spark, cat, stmt, now))
-        elif isinstance(stmt, Show):
-            if stmt.what == "queries":
-                out.append(show_queries(spark))
-            else:
-                out.append(_compile_show(spark, cat, stmt, now=now))
-        else:
-            out.append(_Compiler(spark, cat, stmt, now=now).compile())
-    return out
+    now = _clock(now)
+    return [
+        _read_statement(spark, cat, stmt, now, None)
+        for stmt in parse_all(query)
+    ]
 
 
 def _bare_compiler(now=None) -> "_Compiler":
@@ -2882,14 +2852,10 @@ def influxql_delete(table, query: str, now=None) -> None:
     the date-partitioned warehouse should instead use
     ``..retention.enforce_retention`` (metadata-only partition drops).
     """
-    import datetime
-
-    if isinstance(now, str):
-        now = datetime.datetime.fromisoformat(now)
     stmt = parse(query)
     if not isinstance(stmt, Delete):
         raise InfluxQLError("influxql_delete needs a DELETE/DROP statement")
-    table.delete(delete_condition(stmt, now))
+    table.delete(delete_condition(stmt, _clock(now)))
 
 
 def influxql_into(
@@ -2917,12 +2883,8 @@ def influxql_into(
     stmt = parse(query)
     if not isinstance(stmt, Select) or not stmt.into:
         raise InfluxQLError("influxql_into needs a SELECT ... INTO query")
-    import datetime
-
-    if isinstance(now, str):
-        now = datetime.datetime.fromisoformat(now)
     cat = catalog or EventsCatalog(sf_dir)
-    df = _Compiler(spark, cat, stmt, now=now).compile()
+    df = _Compiler(spark, cat, stmt, now=_clock(now)).compile()
     tags = stmt.group_tags if stmt.group_tags != ["*"] else list(cat.schema.tags)
     keys = [c for c in df.columns if c == "time" or c in tags or c == "measurement"]
     if not keys:
@@ -2966,13 +2928,21 @@ def resolve_from(cat, measurements: list) -> tuple[list[str], bool]:
     return list(dict.fromkeys(names)), multi or len(names) > 1
 
 
-def _union_measurements(spark, cat, names: list[str]) -> DataFrame:
-    if len(names) > 1 and hasattr(cat, "load_many"):
-        # one scan with an IN filter instead of N unioned scans
-        return cat.load_many(spark, names)
-    df = cat.load(spark, names[0])
-    for n in names[1:]:
-        df = df.unionByName(cat.load(spark, n))
+def measurement_points(spark: SparkSession, cat, names: list[str]) -> DataFrame:
+    """The points of the named measurements: the catalog's one
+    relation filtered on ``measurement IN names`` — one scan, the
+    predicate pushed into it (Catalyst's OptimizeIn turns a one-name
+    IN into ``=``)."""
+    return cat.frame(spark).filter(F.col("measurement").isin(names))
+
+
+def _show_points(spark: SparkSession, cat, frm, where, now) -> DataFrame:
+    """The points a SHOW form reads: the FROM measurements (every
+    catalog name when FROM is absent), filtered by WHERE when given —
+    the predicate pushes into the scan."""
+    df = measurement_points(spark, cat, _show_measurements(cat, frm))
+    if where is not None:
+        df = df.filter(_bare_compiler(now)._cond(where))
     return df
 
 
@@ -2994,9 +2964,8 @@ def _compile_show(
             # existence semantics (InfluxDB): list measurements with at
             # least one point matching the predicate — a distinct over
             # the filtered scan, never a collect
-            df = _union_measurements(spark, cat, names).filter(
-                _bare_compiler(now)._cond(stmt.where)
-            )
+            frm = [Str(n) for n in names]
+            df = _show_points(spark, cat, frm, stmt.where, now)
             return (
                 df.select(F.col("measurement").alias("name"))
                 .distinct()
@@ -3018,10 +2987,8 @@ def _compile_show(
             # keys exist only where some point matches the predicate
             # (uniform-schema catalog: all-or-nothing via a 1-row
             # existence probe, never a collect)
-            names = _show_measurements(cat, stmt.from_measurement)
             exists = (
-                _union_measurements(spark, cat, names)
-                .filter(_bare_compiler(now)._cond(stmt.where))
+                _show_points(spark, cat, stmt.from_measurement, stmt.where, now)
                 .limit(1)
                 .select(F.lit(1).alias("_e"))
             )
@@ -3033,12 +3000,9 @@ def _compile_show(
             "fieldKey string, fieldType string",
         )
     if stmt.what in ("series", "series cardinality"):
-        names = _show_measurements(cat, stmt.from_measurement)
-        df = _union_measurements(spark, cat, names)
-        if stmt.where is not None:
-            # tag predicates + time bounds (the dashboard template-
-            # variable shape); the predicate pushes into the scan
-            df = df.filter(_bare_compiler(now)._cond(stmt.where))
+        # tag predicates + time bounds: the dashboard template-variable
+        # shape
+        df = _show_points(spark, cat, stmt.from_measurement, stmt.where, now)
         key = F.concat_ws(
             ",",
             F.col("measurement"),
@@ -3064,16 +3028,14 @@ def _compile_show(
             return src.agg(agg.cast("long").alias("cardinality"))
         return df.select(key.alias("key")).distinct().orderBy("key")
     if stmt.what == "measurement cardinality":
-        names = _show_measurements(cat, stmt.from_measurement)
         if stmt.where is None:
             # catalog metadata — a 1-row literal, no scan
+            names = _show_measurements(cat, stmt.from_measurement)
             return spark.createDataFrame(
                 [(len(names),)], "cardinality long"
             )
         # existence semantics: measurements with >= 1 matching point
-        df = _union_measurements(spark, cat, names).filter(
-            _bare_compiler(now)._cond(stmt.where)
-        )
+        df = _show_points(spark, cat, stmt.from_measurement, stmt.where, now)
         agg = (
             F.count_distinct(F.col("measurement"))
             if stmt.exact
@@ -3084,16 +3046,14 @@ def _compile_show(
         # uniform-schema catalog: every measurement with >= 1 matching
         # point carries the full tag-key set (a metadata count per
         # measurement — InfluxDB's per-measurement result blocks)
-        names = _show_measurements(cat, stmt.from_measurement)
         nkeys = len(sch.tags)
         if stmt.where is None:
+            names = _show_measurements(cat, stmt.from_measurement)
             return spark.createDataFrame(
                 [(n, nkeys) for n in sorted(names)],
                 "measurement string, cardinality long",
             )
-        df = _union_measurements(spark, cat, names).filter(
-            _bare_compiler(now)._cond(stmt.where)
-        )
+        df = _show_points(spark, cat, stmt.from_measurement, stmt.where, now)
         return (
             df.select("measurement")
             .distinct()
@@ -3106,10 +3066,7 @@ def _compile_show(
     if stmt.what == "tag values cardinality":
         if stmt.with_key not in sch.tags:
             raise InfluxQLError(f"unknown tag key {stmt.with_key!r}")
-        names = _show_measurements(cat, stmt.from_measurement)
-        df = _union_measurements(spark, cat, names)
-        if stmt.where is not None:
-            df = df.filter(_bare_compiler(now)._cond(stmt.where))
+        df = _show_points(spark, cat, stmt.from_measurement, stmt.where, now)
         # per-measurement distinct tag values (InfluxDB's result
         # blocks); the estimate form is a single hash-agg of HLL
         # sketches — partial-merged map-side, no distinct exchange
@@ -3133,10 +3090,7 @@ def _compile_show(
     if stmt.what == "tag values":
         if stmt.with_key not in sch.tags:
             raise InfluxQLError(f"unknown tag key {stmt.with_key!r}")
-        names = _show_measurements(cat, stmt.from_measurement)
-        df = _union_measurements(spark, cat, names)
-        if stmt.where is not None:
-            df = df.filter(_bare_compiler(now)._cond(stmt.where))
+        df = _show_points(spark, cat, stmt.from_measurement, stmt.where, now)
         return (
             df.select(
                 F.lit(stmt.with_key).alias("key"),

@@ -495,19 +495,19 @@ def _verify_joined(
     intermediate stays put. Callers opt in by passing spark / sf_dir /
     tag; the streaming screen (micro-batch sized) never does.
     """
-    if spark is None or sf_dir is None or tag is None:
+
+    def per_pair(pairs: DataFrame) -> DataFrame:
         return (
-            cand.hint("shuffle_hash")
+            pairs.hint("shuffle_hash")
             .join(sa, "doc_a")
             .join(sb.hint("merge"), "doc_b")
         )
+
+    if spark is None or sf_dir is None or tag is None:
+        return per_pair(cand)
     n_docs = table_row_count(sf_dir, "documents")
     if n_docs <= VERIFY_GRID_GATE:
-        return (
-            cand.hint("shuffle_hash")
-            .join(sa, "doc_a")
-            .join(sb.hint("merge"), "doc_b")
-        )
+        return per_pair(cand)
     cand_p, n_pairs = _persisted_candidates(spark, sf_dir, tag, cand)
     try:
         conf_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -530,11 +530,7 @@ def _verify_joined(
     while b < VERIFY_GRID_B_MAX and b * b < 2 * conf_part:
         b *= 2
     if n_pairs < (VERIFY_GRID_MIN_MULT * b // VERIFY_GRID_B) * n_docs:
-        return (
-            cand_p.hint("shuffle_hash")
-            .join(sa, "doc_a")
-            .join(sb.hint("merge"), "doc_b")
-        )
+        return per_pair(cand_p)
     # n_part = b² (one cell per partition): partitions beyond b² can
     # only be empty, and merging cells into fewer partitions doubles
     # the per-partition SMJ sort volume — spill-safety margin matters

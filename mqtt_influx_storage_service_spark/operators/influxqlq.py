@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import functions as F
 
-from ..functions.influxql import MeasurementSchema, influxql
+from ..functions.influxql import EventsCatalog, MeasurementSchema, influxql
 from ..sources import load_table
 
 
@@ -46,10 +46,10 @@ class LineitemCatalog:
     def measurement_names(self) -> list[str]:
         return list(self.MEASUREMENTS)
 
-    def load(self, spark, name):
+    def frame(self, spark: SparkSession) -> DataFrame:
         li = load_table(spark, self.sf_dir, "lineitem")
         return li.select(
-            F.lit(name).alias("measurement"),
+            F.lit("lineitem").alias("measurement"),
             F.col("l_shipdate").cast("timestamp").alias("time"),
             F.col("l_returnflag").alias("returnflag"),
             F.col("l_linestatus").alias("linestatus"),
@@ -58,38 +58,25 @@ class LineitemCatalog:
             (F.col("l_orderkey") * 8 + F.col("l_linenumber")).alias("rowkey"),
         )
 
-class NarrowSeriesCatalog:
-    """The untagged narrow-layout binding: NO queryable tags, but the
-    relation carries the physical series identity (``user_id``, the
-    stand-in for the reference's decomposed-topic series,
-    influx_service.py:183-189) as ``MeasurementSchema.series_col``.
-    Raw per-point transforms must still compute per series — this
-    catalog proves the compiler partitions the raw WindowExec by the
-    physical series column instead of sorting the whole measurement in
-    one partition (VERDICT r5 #2)."""
 
-    MEASUREMENTS = ["click", "error", "purchase", "signup", "view"]
+class NarrowSeriesCatalog(EventsCatalog):
+    """The untagged narrow-layout binding of the same ``events``
+    relation: NO queryable tags, but the relation carries the physical
+    series identity (``user_id``, the stand-in for the reference's
+    decomposed-topic series, influx_service.py:183-189) as
+    ``MeasurementSchema.series_col``. Raw per-point transforms must
+    still compute per series — this catalog proves the compiler
+    partitions the raw WindowExec by the physical series column
+    instead of sorting the whole measurement in one partition
+    (VERDICT r5 #2)."""
 
     def __init__(self, sf_dir: str):
-        self.sf_dir = sf_dir
+        super().__init__(sf_dir)
         self.schema = MeasurementSchema(
             tags=[],
             fields=["value"],
             tiebreak="event_id",
             series_col="user_id",
-        )
-
-    def measurement_names(self) -> list[str]:
-        return list(self.MEASUREMENTS)
-
-    def load(self, spark: SparkSession, name: str) -> DataFrame:
-        ev = load_table(spark, self.sf_dir, "events")
-        return ev.filter(F.col("event_type") == name).select(
-            F.lit(name).alias("measurement"),
-            F.col("ts").alias("time"),
-            "user_id",
-            "value",
-            "event_id",
         )
 
 
@@ -1345,15 +1332,15 @@ def _iq_drop_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate is measurement IN (...) AND tag equality — pushed to the
     scan, no shuffle beyond the dimension-sized final aggregate."""
     from ..functions.influxql import (
-        EventsCatalog,
         drop_series_condition,
+        measurement_points,
         parse,
     )
 
     cat = EventsCatalog(sf_dir)
     stmt = parse("DROP SERIES FROM click, error WHERE user_id = 7")
     cond = drop_series_condition(stmt, cat)
-    pts = cat.load_many(spark, cat.measurement_names())
+    pts = measurement_points(spark, cat, cat.measurement_names())
     return (
         pts.filter(~cond)
         .groupBy("measurement")

@@ -98,17 +98,12 @@ def local_cpus() -> str:
 
 
 def get_spark(app_name: str = "mqtt-influx-spark") -> SparkSession:
-    """Build a local session (tests / bench). local[$SPARK_GRAFT_CPUS]."""
-    cpus = local_cpus()
+    """Build a local session (tests / bench). local[$SPARK_GRAFT_CPUS].
+    The builder holds only launch-time settings; :func:`tune` owns the
+    SQL conf."""
     spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
+        SparkSession.builder.master(f"local[{local_cpus()}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .getOrCreate()

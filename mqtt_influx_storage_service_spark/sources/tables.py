@@ -55,6 +55,12 @@ def load_table(
     a fixture regeneration can't change query semantics: either way the
     session TZ is pinned UTC, so ts == floor(ts_ns / 1000) µs exactly,
     matching what DuckDB reads for the oracle.
+
+    The one Spark job a query build may run: the FIRST touch of a table
+    in a session runs ``spark.read.parquet``'s schema inference (one
+    job reading a parquet footer). The frame is cached per
+    (application, sf_dir, table), so every later build over the table
+    runs none (pinned for the ``iq_*`` entries in tests).
     """
     tune(spark)
     if name not in TABLES:

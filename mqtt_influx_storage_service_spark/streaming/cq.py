@@ -53,13 +53,14 @@ from pyspark.sql.streaming import StreamingQuery
 from ..functions.influxql import (
     Call,
     ContinuousQuery,
+    EventsCatalog,
     InfluxQLError,
     Var,
     _bare_compiler,
+    events_points,
     parse_continuous_query,
     resolve_from,
 )
-from ..functions.influxql import EventsCatalog
 from ..tableformat import SnapshotTable
 
 EVENT_STREAM_SCHEMA = (
@@ -157,22 +158,11 @@ def compile_cq(cq_text: str, catalog=None) -> CompiledCQ:
     )
 
 
-def _layout(batch: DataFrame) -> DataFrame:
-    """events-shaped micro-batch → catalog layout (measurement, time,
-    tags, fields) — the same mapping EventsCatalog applies to the
-    batch table."""
-    return batch.select(
-        F.col("event_type").alias("measurement"),
-        F.col("ts").alias("time"),
-        "user_id",
-        "value",
-    )
-
-
 def cq_partials(cc: CompiledCQ, batch: DataFrame) -> DataFrame:
     """Additive partials of one micro-batch, keyed by ``cc.key_cols``.
-    Applies the CQ's measurement filter and WHERE clause first."""
-    df = _layout(batch).filter(F.col("measurement").isin(cc.measurements))
+    Maps the batch through EventsCatalog's layout, then applies the
+    CQ's measurement filter and WHERE clause."""
+    df = events_points(batch).filter(F.col("measurement").isin(cc.measurements))
     if cc.stmt.where is not None:
         df = df.filter(_bare_compiler()._cond(cc.stmt.where))
     us = F.unix_micros(F.col("time"))

@@ -321,6 +321,10 @@ def test_statement_batch(spark, sf_dir):
     assert parse_all(";;") == []
     with pytest.raises(InfluxQLError, match="DELETE/DROP"):
         influxql_batch(spark, sf_dir, "SELECT value FROM click; DROP MEASUREMENT click")
+    # the single-statement entry point shares the batch's refusal
+    for q in ["DROP MEASUREMENT click", "DELETE FROM click WHERE user_id = 7"]:
+        with pytest.raises(InfluxQLError, match="DELETE/DROP"):
+            influxql(spark, sf_dir, q)
 
 
 def test_show_measurements_and_keys(spark, sf_dir):
@@ -648,8 +652,8 @@ def test_delete_and_drop_measurement(spark, sf_dir, tmp_path):
     )
     from mqtt_influx_storage_service_spark.tableformat import SnapshotTable
 
-    pts = EventsCatalog(sf_dir).load_many(
-        spark, ["click", "view", "error"]
+    pts = EventsCatalog(sf_dir).frame(spark).filter(
+        F.col("measurement").isin(["click", "view", "error"])
     )
     table = SnapshotTable(
         spark, str(tmp_path / "pts"), key_cols=["measurement", "event_id"]
@@ -712,6 +716,13 @@ def test_predicate_pushdown_reaches_scan(spark, sf_dir):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan
     assert "IsNotNull(event_type)" in plan or "EqualTo(event_type,click)" in plan
+    # the compiler's FROM filter on the catalog's one relation reaches
+    # the scan as a predicate on event_type, for a name and a /regex/
+    from mqtt_influx_storage_service_spark import plans
+
+    assert "EqualTo(event_type" in plans.pushed_filters(df)
+    df = influxql(spark, sf_dir, "SELECT MAX(value) AS m FROM /^(click|view)$/")
+    assert "In(event_type" in plans.pushed_filters(df)
 
 
 # -- r5 function-surface negative paths ------------------------------------
@@ -796,14 +807,14 @@ class _TinyCatalog:
     def measurement_names(self):
         return ["m"]
 
-    def load(self, spark, name):
+    def frame(self, spark):
         from pyspark.sql import functions as F
 
         df = spark.createDataFrame(
             self.rows, "time string, host string, value double, pid long"
         )
         return df.select(
-            F.lit(name).alias("measurement"),
+            F.lit("m").alias("measurement"),
             F.col("time").cast("timestamp").alias("time"),
             "host",
             "value",
@@ -1103,7 +1114,7 @@ def test_untagged_raw_probe_runs_once_per_statement(
     cat.schema.tags = []          # no tags, no series_col → global window
     # patch the CONCRETE class (Spark 4's classic DataFrame overrides
     # count; patching the pyspark.sql.DataFrame base is a no-op)
-    cls = type(cat.load(spark, "m"))
+    cls = type(cat.frame(spark))
     calls = {"n": 0}
     orig = cls.count
 
@@ -1132,7 +1143,7 @@ def test_drop_series_mutation_and_catalog(spark, sf_dir, tmp_path):
     from mqtt_influx_storage_service_spark.tableformat import SnapshotTable
 
     cat = EventsCatalog(sf_dir)
-    pts = cat.load_many(spark, ["click", "view"])
+    pts = cat.frame(spark).filter(F.col("measurement").isin(["click", "view"]))
     table = SnapshotTable(
         spark, str(tmp_path / "pts"), key_cols=["measurement", "event_id"]
     )
@@ -1683,7 +1694,11 @@ def test_points_catalogs_build_statements_without_jobs(spark, tmp_path):
     """The points catalogs read the lake with the schema its writer
     declares, so building a statement runs no Spark job (no schema
     inference per statement) — for an aggregate, a raw transform and
-    a /regex/ FROM, on both layouts."""
+    a /regex/ FROM, on both layouts. The FROM filter on the catalog's
+    one relation reaches the parquet scan as a predicate on the
+    layout's series column, through the narrow projection and through
+    the wide pivot."""
+    from mqtt_influx_storage_service_spark import plans
     from mqtt_influx_storage_service_spark.functions.influxql import (
         PointsCatalog,
         WidePointsCatalog,
@@ -1705,6 +1720,37 @@ def test_points_catalogs_build_statements_without_jobs(spark, tmp_path):
             f"SELECT MAX({fld}) AS m FROM {rx} {window}",
         ]:
             assert _build_without_jobs(spark, out, q, cat), q
+        col = cat.schema.series_col
+        for frm, pushed in [(m, f"EqualTo({col}"), (rx, f"In({col}")]:
+            q = f"SELECT MAX({fld}) AS m FROM {frm} {window}"
+            df = influxql(spark, out, q, catalog=cat)
+            assert pushed in plans.pushed_filters(df), q
+
+
+def test_iq_registry_builds_without_jobs(spark, sf_dir):
+    """Building an ``iq_*`` registry entry runs no Spark job once
+    ``load_table`` has touched its tables (that first touch is the one
+    documented build job: schema inference of ``events`` and
+    ``lineitem``)."""
+    from mqtt_influx_storage_service_spark.operators import all_queries
+
+    iq = {n: fn for n, fn in all_queries().items() if n.startswith("iq_")}
+    assert iq
+    for fn in iq.values():
+        fn(spark, sf_dir)
+    sc = spark.sparkContext
+    busy = {}
+    for name, fn in sorted(iq.items()):
+        group = f"iq-build-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, name)
+        try:
+            fn(spark, sf_dir)
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        if jobs:
+            busy[name] = len(jobs)
+    assert busy == {}
 
 
 def test_points_catalog_sees_batches_landed_after_construction(spark, tmp_path):
