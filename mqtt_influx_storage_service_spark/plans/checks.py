@@ -37,13 +37,21 @@ def plan_str(df: DataFrame, mode: str = "formatted") -> str:
 
 
 def pushed_filters(df: DataFrame) -> list[str]:
-    """All PushedFilters entries across the plan's parquet scans."""
+    """All PushedFilters entries across the plan's parquet scans, one
+    whole predicate each: commas and brackets inside a predicate
+    (``EqualTo(a,1)``, ``In(a, [1,2])``) stay with it."""
+    text = plan_str(df)
     out: list[str] = []
-    for m in re.finditer(r"PushedFilters: \[([^\]]*)\]", plan_str(df)):
-        body = m.group(1).strip()
-        if body:
-            out.extend(p.strip() for p in body.split(","))
-    return out
+    for m in re.finditer(r"PushedFilters: \[", text):
+        depth, begin = 0, m.end()
+        for i in range(m.end(), len(text)):
+            depth += (text[i] in "([") - (text[i] in ")]")
+            if depth < 0 or depth == 0 and text[i] == ",":
+                out.append(text[begin:i].strip())
+                begin = i + 1
+            if depth < 0:
+                break
+    return [p for p in out if p]
 
 
 def read_schemas(df: DataFrame) -> list[str]:

@@ -20,8 +20,9 @@ Scale notes:
 - The rollup's foreachBatch MERGE touches only the (day, event_type)
   partial rows of the CURRENT batch plus the (tiny) dimension snapshot;
   the point history is never rescanned. Batch-id idempotence makes
-  micro-batch replay converge (exactly-once) — same seam as the
-  registry CDC sink (streaming/ingest.py::start_registry_cdc).
+  micro-batch replay converge (exactly-once) — the continuous-aggregate
+  path of ``sink.start_continuous_aggregate``, shared with the burn-rate
+  monitor and ``cq.start_continuous_query``.
 """
 
 from __future__ import annotations
@@ -39,10 +40,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.timeseries import ZSCORE_CUT, ZSCORE_FRAME, ZSCORE_MIN_N
 from ..tableformat import SnapshotTable
-
-EVENT_STREAM_SCHEMA = (
-    "event_id long, ts timestamp, event_type string, value double"
-)
+from .sink import EVENT_STREAM_SCHEMA, start, start_continuous_aggregate
 
 ALERT_SCHEMA = (
     "event_type string, event_id long, ts timestamp, value double, zscore double"
@@ -137,17 +135,13 @@ def start_anomaly_alerts(
     """Tail ``source_dir`` for event batches, append alerts to
     ``out_dir/anomaly_alerts``."""
     stream = spark.readStream.schema(EVENT_STREAM_SCHEMA).parquet(source_dir)
-    writer = (
-        anomaly_alert_stream(stream)
-        .writeStream.format("parquet")
-        .option("path", os.path.join(out_dir, "anomaly_alerts"))
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "anomaly"))
-        .outputMode("append")
-        .queryName("anomaly_alerts")
+    return start(
+        anomaly_alert_stream(stream),
+        "anomaly_alerts",
+        os.path.join(checkpoint_dir, "anomaly"),
+        os.path.join(out_dir, "anomaly_alerts"),
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # --------------------------------------------------------------------------
@@ -155,9 +149,6 @@ def start_anomaly_alerts(
 # (incremental twin of operators.timeseries.ts_counter_rate)
 # --------------------------------------------------------------------------
 
-RATE_EVENT_SCHEMA = (
-    "event_id long, ts timestamp, user_id long, event_type string, value double"
-)
 RATE_SCHEMA = (
     "user_id long, event_type string, batch_increase double,"
     " total_increase double, n_resets long, n_samples long"
@@ -230,18 +221,14 @@ def start_counter_rate(
 ) -> StreamingQuery:
     """Tail ``source_dir`` for event batches, append per-batch series
     increase snapshots to ``out_dir/counter_rate``."""
-    stream = spark.readStream.schema(RATE_EVENT_SCHEMA).parquet(source_dir)
-    writer = (
-        counter_rate_stream(stream)
-        .writeStream.format("parquet")
-        .option("path", os.path.join(out_dir, "counter_rate"))
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "rate"))
-        .outputMode("append")
-        .queryName("counter_rate")
+    stream = spark.readStream.schema(EVENT_STREAM_SCHEMA).parquet(source_dir)
+    return start(
+        counter_rate_stream(stream),
+        "counter_rate",
+        os.path.join(checkpoint_dir, "rate"),
+        os.path.join(out_dir, "counter_rate"),
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # --------------------------------------------------------------------------
@@ -249,21 +236,6 @@ def start_counter_rate(
 # --------------------------------------------------------------------------
 
 ROLLUP_SCHEMA = "day timestamp, event_type string, n long, sum100 long"
-
-
-def _additive_combine(current: DataFrame, batch: DataFrame) -> DataFrame:
-    """MERGE arithmetic for partial aggregates: same-key partials ADD
-    (not replace) — re-aggregating the union of exact integer partials
-    is associative, so any micro-batch slicing converges to the batch
-    answer."""
-    return (
-        current.unionByName(batch)
-        .groupBy("day", "event_type")
-        .agg(
-            F.sum("n").cast("long").alias("n"),
-            F.sum("sum100").cast("long").alias("sum100"),
-        )
-    )
 
 
 def rollup_partials(batch: DataFrame) -> DataFrame:
@@ -295,39 +267,18 @@ def start_continuous_rollup(
     table_path: str,
     checkpoint_dir: str,
     available_now: bool = True,
-    max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Maintain the (day, event_type) rollup incrementally: each
     micro-batch MERGEs its partials into the SnapshotTable (additive
     combine, batch-id idempotent). The materialized continuous
     aggregate of a 100 TB point stream is these few rows — queries hit
-    the snapshot, never the raw history.
-
-    ``max_files_per_trigger`` bounds each micro-batch's working set —
-    at backlog-catchup scale an unbounded availableNow batch would
-    aggregate the whole history in one trigger, which is exactly the
-    full re-run the partials design exists to avoid."""
-    table = SnapshotTable(
-        spark, table_path, key_cols=["day", "event_type"], schema=ROLLUP_SCHEMA
+    the snapshot, never the raw history."""
+    q, _table = start_continuous_aggregate(
+        spark, source_dir, table_path, ["day", "event_type"], ROLLUP_SCHEMA,
+        rollup_partials, "continuous_rollup",
+        os.path.join(checkpoint_dir, "rollup"), available_now,
     )
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        table.merge(
-            rollup_partials(batch), batch_id=batch_id, combine=_additive_combine
-        )
-
-    reader = spark.readStream.schema(EVENT_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-    writer = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "rollup"))
-        .queryName("continuous_rollup")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return q
 
 
 # --------------------------------------------------------------------------
@@ -348,17 +299,6 @@ def burn_partials(batch: DataFrame) -> DataFrame:
         F.sum(
             F.when(F.col("event_type") == "error", 1).otherwise(0)
         ).cast("long").alias("n_err"),
-    )
-
-
-def _burn_combine(current: DataFrame, batch: DataFrame) -> DataFrame:
-    return (
-        current.unionByName(batch)
-        .groupBy("hour")
-        .agg(
-            F.sum("n_total").cast("long").alias("n_total"),
-            F.sum("n_err").cast("long").alias("n_err"),
-        )
     )
 
 
@@ -384,21 +324,9 @@ def start_burn_rate_monitor(
     each micro-batch MERGEs additively into the SnapshotTable
     (batch-id idempotent). The burn-rate view over a 100 TB event
     history reads these ≤ hours rows, never the raw stream."""
-    table = SnapshotTable(
-        spark, table_path, key_cols=["hour"], schema=BURN_SCHEMA
+    q, _table = start_continuous_aggregate(
+        spark, source_dir, table_path, ["hour"], BURN_SCHEMA, burn_partials,
+        "burn_rate_monitor", os.path.join(checkpoint_dir, "burn"),
+        available_now,
     )
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        table.merge(
-            burn_partials(batch), batch_id=batch_id, combine=_burn_combine
-        )
-
-    stream = spark.readStream.schema(EVENT_STREAM_SCHEMA).parquet(source_dir)
-    writer = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "burn"))
-        .queryName("burn_rate_monitor")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return q

@@ -62,10 +62,7 @@ from ..functions.influxql import (
     resolve_from,
 )
 from ..tableformat import SnapshotTable
-
-EVENT_STREAM_SCHEMA = (
-    "event_id long, ts timestamp, user_id long, event_type string, value double"
-)
+from .sink import additive_combine, start_continuous_aggregate
 
 _SUPPORTED = {"COUNT", "SUM", "MIN", "MAX", "MEAN"}
 
@@ -197,30 +194,13 @@ def cq_partials(cc: CompiledCQ, batch: DataFrame) -> DataFrame:
 
 
 def cq_combine(cc: CompiledCQ):
-    """MERGE combine fn: same-key partials add (or min/max) — exact
-    integer arithmetic, so any micro-batch slicing converges to the
-    batch answer."""
-
-    def combine(current: DataFrame, batch: DataFrame) -> DataFrame:
-        exprs = []
-        for spec in cc.aggs:
-            if spec.func == "MIN":
-                exprs.append(
-                    F.min(spec.partial_cols[0]).alias(spec.partial_cols[0])
-                )
-            elif spec.func == "MAX":
-                exprs.append(
-                    F.max(spec.partial_cols[0]).alias(spec.partial_cols[0])
-                )
-            else:
-                exprs.extend(
-                    F.sum(c).cast("long").alias(c) for c in spec.partial_cols
-                )
-        return (
-            current.unionByName(batch).groupBy(*cc.key_cols).agg(*exprs)
-        )
-
-    return combine
+    """MERGE combine fn: same-key partials add, MIN/MAX partials keep
+    their running extreme — exact integer arithmetic, so any
+    micro-batch slicing converges to the batch answer."""
+    return additive_combine(cc.key_cols, {
+        spec.partial_cols[0]: F.min if spec.func == "MIN" else F.max
+        for spec in cc.aggs if spec.func in ("MIN", "MAX")
+    })
 
 
 def cq_schema(cc: CompiledCQ) -> str:
@@ -269,41 +249,21 @@ def start_continuous_query(
     table_path: str,
     checkpoint_dir: str,
     available_now: bool = True,
-    max_files_per_trigger: int | None = None,
 ) -> tuple[StreamingQuery, CompiledCQ, SnapshotTable]:
     """Run a CREATE CONTINUOUS QUERY against the event stream at
     ``source_dir``: each micro-batch's partials MERGE into the snapshot
     at ``table_path`` (additive combine, batch-id idempotent →
     exactly-once across restarts). Returns (query, compiled, table);
-    read the aggregate with ``cq_view(compiled, table)``.
-    ``max_files_per_trigger`` bounds each micro-batch's working set
-    (backlog catch-up must not become one history-sized trigger)."""
+    read the aggregate with ``cq_view(compiled, table)``. A tailing
+    query (``available_now=False``) triggers every RESAMPLE EVERY <d>:
+    the rollup advances on InfluxDB's schedule, each advance touching
+    only the new data (never a re-run of the full select)."""
     cc = compile_cq(cq_text)
-    table = SnapshotTable(
-        spark, table_path, key_cols=cc.key_cols, schema=cq_schema(cc)
+    q, table = start_continuous_aggregate(
+        spark, source_dir, table_path, cc.key_cols, cq_schema(cc),
+        lambda batch: cq_partials(cc, batch), f"cq_{cc.name}",
+        os.path.join(checkpoint_dir, f"cq_{cc.name}"), available_now,
+        cq_combine(cc),
+        cc.every_us // 1000 if cc.every_us is not None else None,
     )
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
-        table.merge(
-            cq_partials(cc, batch), batch_id=batch_id, combine=cq_combine(cc)
-        )
-
-    reader = spark.readStream.schema(EVENT_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-    writer = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", os.path.join(checkpoint_dir, f"cq_{cc.name}"))
-        .queryName(f"cq_{cc.name}")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif cc.every_us is not None:
-        # RESAMPLE EVERY <d> → the micro-batch trigger interval: the
-        # rollup advances on InfluxDB's schedule, each advance touching
-        # only the new data (never a re-run of the full select)
-        writer = writer.trigger(
-            processingTime=f"{cc.every_us // 1000} milliseconds"
-        )
-    return writer.start(), cc, table
+    return q, cc, table

@@ -49,6 +49,10 @@ from pyspark.sql.types import (
 
 from ..functions.coercion import coerce_payload
 from ..functions.topics import DATA_TOPIC_PREFIX, parse_topic
+from .sink import BatchDir, Merge, start
+
+# the registry CDC topic (influx_service.py:324-328)
+EVENTS_TOPIC = "openchirp/service/x/thing/events"
 
 # (arrival_ts, topic, payload) — the reference's queue tuple
 # (influx_service.py:78-80); ts is stamped at arrival, so it is
@@ -542,7 +546,7 @@ def start_registry_cdc(
     table_dir: str,
     checkpoint_dir: str,
     bootstrap: DataFrame | None = None,
-    events_topic: str = "openchirp/service/x/thing/events",
+    events_topic: str = EVENTS_TOPIC,
     available_now: bool = True,
 ) -> StreamingQuery:
     """A10 as a foreachBatch MERGE into a :class:`SnapshotTable` — the
@@ -564,18 +568,10 @@ def start_registry_cdc(
     msgs = mqtt_file_stream(spark, source_dir)
     _data, events = dispatch(msgs, events_topic)
     cdc = parse_service_events(events)
-    writer = (
-        cdc.writeStream.foreachBatch(
-            lambda batch, batch_id: table.merge(
-                batch, batch_id=batch_id, combine=apply_cdc
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("registry_cdc")
+    return start(
+        cdc, "registry_cdc", checkpoint_dir, Merge(table, combine=apply_cdc),
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def transducer_pairs(msgs: DataFrame) -> DataFrame:
@@ -595,7 +591,7 @@ def start_transducer_autocreate(
     source_dir: str,
     table_dir: str,
     checkpoint_dir: str,
-    events_topic: str = "openchirp/service/x/thing/events",
+    events_topic: str = EVENTS_TOPIC,
     available_now: bool = True,
 ) -> StreamingQuery:
     """A11 (influx_service.py:215-274): create unseen (device,
@@ -620,22 +616,17 @@ def start_transducer_autocreate(
     data, _events = dispatch(msgs, events_topic)
     pairs = transducer_pairs(data)
 
-    def _create(batch: DataFrame, batch_id: int) -> None:
-        candidates = (
+    def _candidates(batch: DataFrame) -> DataFrame:
+        return (
             batch.groupBy("device_id", "transducer")
             .agg(F.min("ts").alias("created_ts"))
             .withColumn("created_by", F.lit(TRANSDUCER_CREATED_BY))
         )
-        table.merge(candidates, batch_id=batch_id, insert_only=True)
 
-    writer = (
-        pairs.writeStream.foreachBatch(_create)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName("transducer_autocreate")
+    return start(
+        pairs, "transducer_autocreate", checkpoint_dir,
+        Merge(table, _candidates, insert_only=True), available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def bootstrap_registry(spark: SparkSession, snapshot_path: str) -> DataFrame:
@@ -657,7 +648,7 @@ def start_ingest(
     out_dir: str,
     checkpoint_dir: str,
     devices: DataFrame | None = None,
-    events_topic: str = "openchirp/service/x/thing/events",
+    events_topic: str = EVENTS_TOPIC,
     available_now: bool = True,
     source: DataFrame | None = None,
 ) -> StreamingQuery:
@@ -690,25 +681,14 @@ def start_ingest(
     well_formed, malformed = split_malformed(data)
     points = to_points(well_formed, devices)
 
-    dead_writer = (
-        malformed.writeStream.format("parquet")
-        .option("path", os.path.join(out_dir, "dead_letter"))
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "dead_letter"))
-        .outputMode("append")
-        .queryName("dead_letter")
+    dead_q = start(
+        malformed, "dead_letter", os.path.join(checkpoint_dir, "dead_letter"),
+        os.path.join(out_dir, "dead_letter"), available_now,
     )
-    writer = (
-        points.writeStream.format("parquet")
-        .option("path", os.path.join(out_dir, "points"))
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "points"))
-        .partitionBy("ingest_date")
-        .outputMode("append")
+    q = start(
+        points, "points", os.path.join(checkpoint_dir, "points"),
+        os.path.join(out_dir, "points"), available_now,
     )
-    if available_now:
-        dead_writer = dead_writer.trigger(availableNow=True)
-        writer = writer.trigger(availableNow=True)
-    dead_q = dead_writer.start()
-    q = writer.start()
     if available_now:
         # batch-replay mode: the caller awaits the returned points
         # query; make sure the quarantine branch also drains before the
@@ -723,7 +703,7 @@ def start_enriched_ingest(
     out_dir: str,
     checkpoint_dir: str,
     lookup,
-    events_topic: str = "openchirp/service/x/thing/events",
+    events_topic: str = EVENTS_TOPIC,
     available_now: bool = True,
     source: DataFrame | None = None,
 ) -> StreamingQuery:
@@ -739,36 +719,28 @@ def start_enriched_ingest(
     subsequent batch (pinned in tests/test_streaming.py).
 
     Exactly-once without the file-sink log: each micro-batch lands in
-    its own ``batch=<id>`` directory with ``mode("overwrite")`` — a
-    crash-replay of the last uncommitted batch overwrites its own
-    directory instead of appending duplicates, the standard idempotent
-    foreachBatch layout. Readers hit the ``points_enriched`` root and
-    see ``batch`` as a discovered partition column. The dimension is
-    broadcast per batch (registry-sized, like the reference's
-    in-memory device dict)."""
+    its own ``batch_id=<id>`` directory with ``mode("overwrite")``
+    (``sink.BatchDir``) — a crash-replay of the last uncommitted batch
+    overwrites its own directory instead of appending duplicates, the
+    standard idempotent foreachBatch layout. Readers hit the
+    ``points_enriched`` root and see ``batch_id`` as a discovered
+    partition column. The dimension is broadcast per batch
+    (registry-sized, like the reference's in-memory device dict)."""
     msgs = source if source is not None else mqtt_file_stream(spark, source_dir)
     data, _events = dispatch(msgs, events_topic)
     well_formed, _malformed = split_malformed(data)
-    points = to_points(well_formed)
-    root = os.path.join(out_dir, "points_enriched")
-
-    def _write(batch: DataFrame, batch_id: int) -> None:
-        dim = lookup(spark)
-        enriched = batch.join(F.broadcast(dim), "device_id", "left_outer")
-        (
-            enriched.write.mode("overwrite")
-            .partitionBy("ingest_date")
-            .parquet(os.path.join(root, f"batch={batch_id}"))
-        )
-
-    writer = (
-        points.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "enriched"))
-        .queryName("enriched_ingest")
+    return start(
+        to_points(well_formed),
+        "enriched_ingest",
+        os.path.join(checkpoint_dir, "enriched"),
+        BatchDir(
+            os.path.join(out_dir, "points_enriched"),
+            lambda batch: batch.join(
+                F.broadcast(lookup(spark)), "device_id", "left_outer"
+            ),
+        ),
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_stats(
@@ -782,17 +754,11 @@ def start_stats(
     """Wire the stats path (A13/A14) to its own sink. Append mode +
     watermark: a window emits once it is final — the same at-most-once
     publish cadence as the reference's stats thread."""
-    msgs = mqtt_file_stream(spark, source_dir)
-    stats = throughput_stats(msgs, interval)
-    writer = (
-        stats.writeStream.format("parquet")
-        .option("path", os.path.join(out_dir, "stats"))
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    stats = throughput_stats(mqtt_file_stream(spark, source_dir), interval)
+    return start(
+        stats, "stats", checkpoint_dir, os.path.join(out_dir, "stats"),
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stop_all(spark: SparkSession) -> None:

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.lineprotocol import field_as_double, parse_line_protocol
+from .sink import start
 
 __all__ = ["lines_to_points", "start_line_protocol_ingest"]
 
@@ -74,22 +75,10 @@ def start_line_protocol_ingest(
     # one source, two sinks: union with a route tag would force a single
     # schema; two queries over the same file source each keep their own
     # checkpoint and commit log (standard quarantine-split shape)
-    writer = (
-        good.writeStream.format("parquet")
-        .option("path", os.path.join(points_dir, "points"))
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "lp_points"))
-        .partitionBy("ingest_date")
-        .queryName("lp_points")
+    return (
+        start(good, "lp_points", os.path.join(checkpoint_dir, "lp_points"),
+              os.path.join(points_dir, "points"), available_now),
+        start(bad, "lp_quarantine",
+              os.path.join(checkpoint_dir, "lp_quarantine"),
+              os.path.join(points_dir, "quarantine"), available_now),
     )
-    qwriter = (
-        bad.writeStream.format("parquet")
-        .option("path", os.path.join(points_dir, "quarantine"))
-        .option(
-            "checkpointLocation", os.path.join(checkpoint_dir, "lp_quarantine")
-        )
-        .queryName("lp_quarantine")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-        qwriter = qwriter.trigger(availableNow=True)
-    return writer.start(), qwriter.start()

@@ -14,10 +14,8 @@ from pyspark.sql import functions as F
 import mqtt_influx_storage_service_spark.streaming as st
 from mqtt_influx_storage_service_spark.operators import all_queries
 from mqtt_influx_storage_service_spark.sources import load_table
-from mqtt_influx_storage_service_spark.streaming.anomaly import (
-    _additive_combine,
-    rollup_partials,
-)
+from mqtt_influx_storage_service_spark.streaming.anomaly import rollup_partials
+from mqtt_influx_storage_service_spark.streaming.sink import additive_combine
 from mqtt_influx_storage_service_spark.tableformat import SnapshotTable
 
 SF = "/root/testdata/sf0.001"
@@ -127,8 +125,9 @@ def test_additive_combine_is_slicing_invariant(spark):
     a2 = rollup_partials(ev.filter(F.col("event_id") % 2 == 1))
     b1 = rollup_partials(ev.filter(F.col("event_id") < 100))
     b2 = rollup_partials(ev.filter(F.col("event_id") >= 100))
-    fold_a = _additive_combine(a1, a2)
-    fold_b = _additive_combine(b1, b2)
+    combine = additive_combine(["day", "event_type"])
+    fold_a = combine(a1, a2)
+    fold_b = combine(b1, b2)
     key = lambda r: (str(r.day), r.event_type, r.n, r.sum100)  # noqa: E731
     assert {key(r) for r in fold_a.collect()} == {
         key(r) for r in fold_b.collect()

@@ -720,9 +720,9 @@ def test_predicate_pushdown_reaches_scan(spark, sf_dir):
     # the scan as a predicate on event_type, for a name and a /regex/
     from mqtt_influx_storage_service_spark import plans
 
-    assert "EqualTo(event_type" in plans.pushed_filters(df)
+    assert "EqualTo(event_type,click)" in plans.pushed_filters(df)
     df = influxql(spark, sf_dir, "SELECT MAX(value) AS m FROM /^(click|view)$/")
-    assert "In(event_type" in plans.pushed_filters(df)
+    assert "In(event_type, [click,view])" in plans.pushed_filters(df)
 
 
 # -- r5 function-surface negative paths ------------------------------------
@@ -1710,9 +1710,10 @@ def test_points_catalogs_build_statements_without_jobs(spark, tmp_path):
         [f"openchirp/device/d{d}/{t}" for d in range(2) for t in ("temp", "hum")],
     )
     window = "WHERE time >= '2024-01-01' AND time < '2024-01-02'"
-    for cat, fld, m, rx in [
-        (PointsCatalog(spark, out), "value", "d0_temp", "/^d._temp$/"),
-        (WidePointsCatalog(spark, out), "temp", "d0", "/^d/"),
+    for cat, fld, m, rx, names in [
+        (PointsCatalog(spark, out), "value", "d0_temp", "/^d._temp$/",
+         "d0_temp,d1_temp"),
+        (WidePointsCatalog(spark, out), "temp", "d0", "/^d/", "d0,d1"),
     ]:
         for q in [
             f"SELECT MEAN({fld}) AS m FROM {m} {window} GROUP BY time(1m)",
@@ -1721,7 +1722,9 @@ def test_points_catalogs_build_statements_without_jobs(spark, tmp_path):
         ]:
             assert _build_without_jobs(spark, out, q, cat), q
         col = cat.schema.series_col
-        for frm, pushed in [(m, f"EqualTo({col}"), (rx, f"In({col}")]:
+        for frm, pushed in [
+            (m, f"EqualTo({col},{m})"), (rx, f"In({col}, [{names}])")
+        ]:
             q = f"SELECT MAX({fld}) AS m FROM {frm} {window}"
             df = influxql(spark, out, q, catalog=cat)
             assert pushed in plans.pushed_filters(df), q

@@ -57,6 +57,20 @@ def test_query_pushdown_reaches_scan(spark):
         assert plans.pushed_filters(df), f"{name}: no pushed filters"
 
 
+def test_pushed_filters_are_whole_predicates(spark, tmp_path):
+    """Each entry is one whole predicate: the commas and the bracketed
+    list inside ``In(a, [1,2])`` stay with it, and a filter pushed after
+    an ``In`` list is kept."""
+    path = str(tmp_path / "t")
+    spark.range(10).selectExpr("cast(id AS string) AS a", "id AS b").write.parquet(path)
+    df = spark.read.parquet(path).filter(
+        F.col("a").isin("1", "2") & (F.col("b") > 3)
+    )
+    assert plans.pushed_filters(df) == [
+        "IsNotNull(b)", "In(a, [1,2])", "GreaterThan(b,3)"
+    ]
+
+
 def test_manifest_query_prunes_columns(spark):
     """mm_manifest aggregates metadata; the scan must not decode more
     than it needs (documents has 5 columns; text is needed only for
