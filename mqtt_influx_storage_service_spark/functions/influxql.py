@@ -59,7 +59,7 @@ from __future__ import annotations
 
 import datetime
 import re
-from dataclasses import dataclass, field as dc_field
+from dataclasses import dataclass, field as dc_field, replace as dc_replace
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -1379,6 +1379,11 @@ _TA_EMIT_FIRST = (
     "DOUBLE_EXPONENTIAL_MOVING_AVERAGE",
     "TRIPLE_EXPONENTIAL_MOVING_AVERAGE",
 )
+# The running transforms: each path lowers them with its own exact
+# arithmetic (cents on raw points, round(·,6) on aggregates).
+_RUNNING = ("CUMULATIVE_SUM", "MOVING_AVERAGE")
+# Per-series window functions over raw points (_compile_raw)
+_RAW_WINDOW_FUNCS = {"ELAPSED", *_TRANSFORMS}
 # INTEGRAL is an aggregate whose per-row term needs a lag window over
 # the group's points BEFORE the groupBy (trapezoid vs the previous
 # point) — precomputed in _compile_agg like the FIRST/LAST rank columns.
@@ -1408,6 +1413,76 @@ def _is_raw_transform(e, st: "Select") -> bool:
         and bool(e.args)
         and isinstance(e.args[0], Var)
     )
+
+
+def _unit_ns(c: Call, default: int = 1_000_000_000) -> int:
+    """The optional duration-unit argument of DERIVATIVE, ELAPSED and
+    INTEGRAL (``f(x, 1m)``), in ns."""
+    return c.args[1].ns if len(c.args) > 1 and isinstance(c.args[1], Dur) else default
+
+
+def _floor_us(us: Column, iv_us: int, off_us: int) -> Column:
+    """Exact integer floor of epoch-µs ``us`` to the start of its
+    ``GROUP BY time(iv, offset)`` bucket (no double division)."""
+    s = us - F.lit(off_us)
+    return s - s % F.lit(iv_us) + F.lit(off_us)
+
+
+def time_bucket(
+    time: Column, group_time_ns: int, offset_ns: int = 0, tz: str | None = None
+) -> Column:
+    """The start of the ``GROUP BY time(iv[, offset]) TZ()`` bucket
+    holding ``time`` — the one bucket every SELECT shape and every
+    continuous query groups by. TZ('zone') floors the zone-shifted
+    timestamp, then shifts the bucket start back to its UTC instant;
+    from_/to_utc_timestamp consult the IANA tzdb, so DST transitions
+    move the boundary with the wall clock (pinned in
+    tests/test_influxql.py)."""
+    local = F.from_utc_timestamp(time, tz) if tz else time
+    start = F.timestamp_micros(
+        _floor_us(F.unix_micros(local), group_time_ns // 1000, offset_ns // 1000)
+    )
+    return F.to_utc_timestamp(start, tz) if tz else start
+
+
+def _series_transform(
+    df: DataFrame, e: Call, src: Column, w
+) -> tuple[DataFrame, Column]:
+    """Lower one point-to-point transform of the ordered series ``src``
+    over the per-series window ``w``: DIFFERENCE, DERIVATIVE (Δvalue /
+    Δtime-in-units, default 1s), their NON_NEGATIVE_ forms and the
+    technical-analysis family. Raw points and bucketed aggregates both
+    lower through here. The TA value frames (and DEMA/TEMA/TRIX's EMA
+    stages) ride ``df`` as ``_ta_*`` columns; the returned column reads
+    them, so the caller materializes it before the next call."""
+    base = e.func.replace("NON_NEGATIVE_", "")
+    if base == "DIFFERENCE":
+        # single IEEE subtraction of identical doubles — deterministic
+        # without rounding
+        col = src - F.lag(src).over(w)
+    elif base == "DERIVATIVE":
+        us = F.unix_micros(F.col("time"))
+        dt_units = (us - F.lag(us).over(w)) / F.lit(_unit_ns(e) / 1000.0)
+        col = F.round((src - F.lag(src).over(w)) / dt_units, 6)
+    elif e.func in _TA_EMA_STAGES:
+        # DEMA/TEMA/TRIX chain the EMA kernel through materialized
+        # stage columns (a window cannot read a window in one projection)
+        n, es, ema = _ta_n(e), [], "EXPONENTIAL_MOVING_AVERAGE"
+        for s in range(_TA_EMA_STAGES[e.func]):
+            df = df.withColumn(f"_ta_l{s}", _ta_list(ema, n, src, w))
+            df = df.withColumn(f"_ta_e{s}", _ta_fold(ema, n, f"_ta_l{s}"))
+            src = F.col(f"_ta_e{s}")
+            es.append(src)
+        return df, _ta_compose(e.func, es, w)
+    else:  # EMA / CMO / RSI / KER: fold the per-series value frame
+        n = _ta_n(e)
+        df = df.withColumn("_ta_l", _ta_list(e.func, n, src, w))
+        return df, _ta_fold(e.func, n, "_ta_l")
+    if e.func.startswith("NON_NEGATIVE_"):
+        # InfluxQL omits negative results: NULL here, and each path
+        # drops or keeps the row by its own first-point rule
+        col = F.when(col >= 0, col)
+    return df, col
 
 
 def _eval_time(v, now) -> "datetime.datetime":
@@ -1639,6 +1714,16 @@ class _Compiler:
             names.append(base if n == 0 else f"{base}_{n}")
         return names
 
+    def _bucketed(self, df: DataFrame, keys: list[str]) -> tuple[DataFrame, list[str]]:
+        """With GROUP BY time(): ``df`` plus its ``_bucket`` start
+        (:func:`time_bucket`) and the group columns ``keys + _bucket``;
+        without it, ``df`` and ``keys``."""
+        st = self.stmt
+        if st.group_time_ns is None:
+            return df, list(keys)
+        bucket = time_bucket(F.col("time"), st.group_time_ns, st.offset_ns, st.tz)
+        return df.withColumn("_bucket", bucket), [*keys, "_bucket"]
+
     def compile(self) -> DataFrame:
         st = self.stmt
         df, multi = self._source()
@@ -1780,16 +1865,7 @@ class _Compiler:
         st = self.stmt
         fld = call.args[0].name
         tb = [t for t in self.tiebreak if t in df.columns]
-        gcols = [F.col(k) for k in keys]  # keys already carries measurement
-        if st.group_time_ns is not None:
-            iv_us = st.group_time_ns // 1000
-            off_us = st.offset_ns // 1000
-            us = F.unix_micros(F.col("time")) - F.lit(off_us)
-            df = df.withColumn(
-                "_bucket",
-                F.timestamp_micros(us - us % F.lit(iv_us) + F.lit(off_us)),
-            )
-            gcols = gcols + [F.col("_bucket")]
+        df, gcols = self._bucketed(df, keys)  # keys already carries measurement
         if call.func == "MAX":
             order = [F.col(fld).desc(), F.col("time").asc()]
         elif call.func == "MIN":
@@ -1861,15 +1937,7 @@ class _Compiler:
             raise InfluxQLError("DISTINCT expects one field reference")
         fld = e.args[0].name
         name = st.fields[0].alias or "distinct"
-        gcols = list(keys)
-        if st.group_time_ns is not None:
-            iv_us = st.group_time_ns // 1000
-            off_us = st.offset_ns // 1000
-            us = F.unix_micros(F.col("time")) - F.lit(off_us)
-            df = df.withColumn(
-                "_bucket", F.timestamp_micros(us - us % F.lit(iv_us) + F.lit(off_us))
-            )
-            gcols = gcols + ["_bucket"]
+        df, gcols = self._bucketed(df, keys)
         out = (
             df.filter(F.col(fld).isNotNull())
             .select(*gcols, F.col(fld).alias(name))
@@ -1885,36 +1953,28 @@ class _Compiler:
     def _compile_top_bottom(self, df: DataFrame, keys: list[str]) -> DataFrame:
         st = self.stmt
         call: Call = st.fields[0].expr
+        a = call.args
         # TOP(field, tag, N) / BOTTOM(field, tag, N): the extreme value
         # for each of N distinct tag values (InfluxDB's per-tag form) —
         # rank within (group, tag) to find each tag's extreme point,
         # then rank those representatives within the group and keep N.
+        tag = (
+            a[1].name
+            if len(a) == 3 and call.func != "SAMPLE" and isinstance(a[1], Var)
+            else None
+        )
         if (
-            len(call.args) == 3
-            and call.func in ("TOP", "BOTTOM")
-            and isinstance(call.args[0], Var)
-            and isinstance(call.args[1], Var)
-            and isinstance(call.args[2], Num)
-        ):
-            return self._compile_top_bottom_tags(df, keys)
-        if (
-            len(call.args) != 2
-            or not isinstance(call.args[0], Var)
-            or not isinstance(call.args[1], Num)
+            len(a) != (2 if tag is None else 3)
+            or not isinstance(a[0], Var)
+            or not isinstance(a[-1], Num)
         ):
             raise InfluxQLError(f"{call.func}(field, N) needs a field and an integer N")
-        fld = call.args[0].name
-        n = int(call.args[1].value)
+        if tag is not None and tag not in df.columns:
+            raise InfluxQLError(f"{call.func}: unknown tag {tag!r}")
+        fld = a[0].name
+        n = int(a[-1].value)
         name = st.fields[0].alias or call.func.lower()
-        gcols = list(keys)
-        if st.group_time_ns is not None:
-            iv_us = st.group_time_ns // 1000
-            off_us = st.offset_ns // 1000
-            us = F.unix_micros(F.col("time")) - F.lit(off_us)
-            df = df.withColumn(
-                "_bucket", F.timestamp_micros(us - us % F.lit(iv_us) + F.lit(off_us))
-            )
-            gcols = gcols + ["_bucket"]
+        df, gcols = self._bucketed(df, keys)
         tb = [t for t in self.tiebreak if t in df.columns]
         if call.func == "SAMPLE":
             # InfluxQL SAMPLE(field, N) is a nondeterministic reservoir;
@@ -1932,6 +1992,11 @@ class _Compiler:
                 F.col("time"),
                 *[F.col(c) for c in tb],
             ]
+        if tag is not None:
+            w_tag = Window.partitionBy(*gcols, tag).orderBy(*order)
+            df = df.withColumn("_rt", F.row_number().over(w_tag)).filter(
+                F.col("_rt") == 1
+            )
         w = (
             Window.partitionBy(*gcols).orderBy(*order)
             if gcols
@@ -1942,61 +2007,7 @@ class _Compiler:
             .filter(F.col("_rn") <= n)
             # point time survives; the bucket is the grouping key
             .select(
-                *[c for c in gcols if c != "_bucket"],
-                *(["_bucket"] if "_bucket" in gcols else []),
-                "time",
-                F.col(fld).alias(name),
-            )
-        )
-        if "_bucket" in out.columns:
-            out = out.withColumnRenamed("_bucket", "bucket")
-        return out
-
-    def _compile_top_bottom_tags(
-        self, df: DataFrame, keys: list[str]
-    ) -> DataFrame:
-        st = self.stmt
-        call: Call = st.fields[0].expr
-        fld = call.args[0].name
-        tag = call.args[1].name
-        n = int(call.args[2].value)
-        if tag not in df.columns:
-            raise InfluxQLError(f"{call.func}: unknown tag {tag!r}")
-        name = st.fields[0].alias or call.func.lower()
-        gcols = list(keys)
-        if st.group_time_ns is not None:
-            iv_us = st.group_time_ns // 1000
-            off_us = st.offset_ns // 1000
-            us = F.unix_micros(F.col("time")) - F.lit(off_us)
-            df = df.withColumn(
-                "_bucket",
-                F.timestamp_micros(us - us % F.lit(iv_us) + F.lit(off_us)),
-            )
-            gcols = gcols + ["_bucket"]
-        tb = [t for t in self.tiebreak if t in df.columns]
-        order = [
-            F.col(fld).desc() if call.func == "TOP" else F.col(fld).asc(),
-            F.col("time"),
-            *[F.col(c) for c in tb],
-        ]
-        w_tag = Window.partitionBy(*gcols, tag).orderBy(*order)
-        reps = df.withColumn("_rt", F.row_number().over(w_tag)).filter(
-            F.col("_rt") == 1
-        )
-        w_grp = (
-            Window.partitionBy(*gcols).orderBy(*order)
-            if gcols
-            else Window.orderBy(*order)
-        )
-        out = (
-            reps.withColumn("_rn", F.row_number().over(w_grp))
-            .filter(F.col("_rn") <= n)
-            .select(
-                *[c for c in gcols if c != "_bucket"],
-                *(["_bucket"] if "_bucket" in gcols else []),
-                "time",
-                tag,
-                F.col(fld).alias(name),
+                *gcols, "time", *([tag] if tag else []), F.col(fld).alias(name)
             )
         )
         if "_bucket" in out.columns:
@@ -2029,19 +2040,9 @@ class _Compiler:
         name = st.fields[0].alias or "holt_winters"
 
         # bucketed aggregate of the inner call via the normal agg path
-        sub = Select(
-            [Field(inner, "_hw_in")],
-            st.measurements,
-            st.where,
-            st.group_time_ns,
-            st.group_tags,
-            None,
-            False,
-            None,
-            None,
-            None,
-            None,
-            st.offset_ns,
+        sub = dc_replace(
+            st, fields=[Field(inner, "_hw_in")], fill=None, order_desc=False,
+            limit=None, offset=None, slimit=None, soffset=None, into=None,
         )
         agg_df = _Compiler(self.spark, self.catalog, sub, now=self.now).compile()
         kcols = [c for c in agg_df.columns if c not in ("time", "_hw_in")]
@@ -2049,10 +2050,10 @@ class _Compiler:
         # Same folds as operators/timeseries (cited there: the
         # recurrence is inherently sequential, so bound the series to
         # its buckets and fold the ARRAY — never iterate rows); S=0 is
-        # Holt's linear trend, S>0 the additive seasonal triple
-        # smoothing via timeseries.hw_seasonal_fold. α=β(=γ)=0.5
+        # Holt's linear trend (timeseries.hw_linear_fold), S>0 the
+        # additive seasonal triple smoothing (hw_seasonal_fold). α=β(=γ)=0.5
         # exactly representable, raw doubles out.
-        from ..operators.timeseries import HW_ALPHA, HW_BETA, hw_seasonal_fold
+        from ..operators.timeseries import hw_linear_fold, hw_seasonal_fold
 
         grouped = agg_df.groupBy(*kcols) if kcols else agg_df.groupBy(F.lit(1).alias("_g"))
         arrs = (
@@ -2069,28 +2070,7 @@ class _Compiler:
             .filter(F.size("xs") >= (season + 1 if season else 2))
         )
         xs = F.col("xs")
-        if season:
-            fold = hw_seasonal_fold(xs, season)
-        else:
-            a, na, b, nb = (
-                F.lit(v)
-                for v in (HW_ALPHA, 1 - HW_ALPHA, HW_BETA, 1 - HW_BETA)
-            )
-            init = F.struct(
-                F.element_at(xs, 2).alias("l"),
-                (F.element_at(xs, 2) - F.element_at(xs, 1)).alias("b"),
-            )
-            fold = F.aggregate(
-                F.slice(xs, 3, F.greatest(F.size(xs) - 2, F.lit(0))),
-                init,
-                lambda acc, x: F.struct(
-                    (a * x + na * (acc["l"] + acc["b"])).alias("l"),
-                    (
-                        b * (a * x + na * (acc["l"] + acc["b"]) - acc["l"])
-                        + nb * acc["b"]
-                    ).alias("b"),
-                ),
-            )
+        fold = hw_seasonal_fold(xs, season) if season else hw_linear_fold(xs)
         fitted = arrs.select(
             *(kcols if kcols else []), "_last_t", fold.alias("_st")
         )
@@ -2126,20 +2106,9 @@ class _Compiler:
         # never force a drop.
         lag_names: list[str] = []
         names = self._field_names()
-        raw_lag_funcs = (
-            "ELAPSED",
-            "DERIVATIVE",
-            "DIFFERENCE",
-            "NON_NEGATIVE_DERIVATIVE",
-            "NON_NEGATIVE_DIFFERENCE",
-        )
-        raw_run_funcs = ("CUMULATIVE_SUM", "MOVING_AVERAGE")
         for i, f in enumerate(self.stmt.fields):
             e = f.expr
-            if not (
-                isinstance(e, Call)
-                and e.func in raw_lag_funcs + raw_run_funcs + _TA_FUNCS
-            ):
+            if not (isinstance(e, Call) and e.func in _RAW_WINDOW_FUNCS):
                 continue
             if not e.args or not isinstance(e.args[0], Var):
                 raise InfluxQLError(f"{e.func} expects a field reference")
@@ -2175,13 +2144,9 @@ class _Compiler:
             w = (
                 Window.partitionBy(*series) if series else Window.partitionBy()
             ).orderBy("time", *tb)
-            us = F.unix_micros(F.col("time"))
             if e.func == "ELAPSED":
-                unit_ns = (
-                    e.args[1].ns
-                    if len(e.args) > 1 and isinstance(e.args[1], Dur)
-                    else 1
-                )
+                us = F.unix_micros(F.col("time"))
+                unit_ns = _unit_ns(e, default=1)
                 elapsed_ns = (us - F.lag(us).over(w)) * F.lit(1000)
                 # exact truncating division: subtract the remainder so
                 # the double division is over an exact multiple (a bare
@@ -2190,39 +2155,7 @@ class _Compiler:
                     (elapsed_ns - elapsed_ns % F.lit(unit_ns))
                     / F.lit(unit_ns)
                 ).cast("long")
-            elif e.func in _TA_FUNCS:
-                # technical-analysis transforms over raw points: the
-                # same ordered-fold kernels as the bucket path, over a
-                # per-series frame of exact scaled longs (doubles for
-                # EMA). The list/stage columns ride the input frame;
-                # they are simply not projected by the final select.
-                n = _ta_n(e)
-                if e.func in _TA_EMA_STAGES:
-                    cur = F.col(e.args[0].name)
-                    es = []
-                    for s in range(_TA_EMA_STAGES[e.func]):
-                        ln = f"_tal{s}_{names[i]}"
-                        en = f"_tae{s}_{names[i]}"
-                        df = df.withColumn(
-                            ln,
-                            _ta_list(
-                                "EXPONENTIAL_MOVING_AVERAGE", n, cur, w
-                            ),
-                        )
-                        df = df.withColumn(
-                            en,
-                            _ta_fold("EXPONENTIAL_MOVING_AVERAGE", n, ln),
-                        )
-                        cur = F.col(en)
-                        es.append(cur)
-                    col = _ta_compose(e.func, es, w)
-                else:
-                    df = df.withColumn(
-                        f"_tal_{names[i]}",
-                        _ta_list(e.func, n, F.col(e.args[0].name), w),
-                    )
-                    col = _ta_fold(e.func, n, f"_tal_{names[i]}")
-            elif e.func in raw_run_funcs:
+            elif e.func in _RUNNING:
                 # cents-exact running forms (the repo's order-free
                 # integer discipline — see operators/timeseries.
                 # ts_cumulative_sum): frame-bounded sums of exact
@@ -2247,38 +2180,13 @@ class _Compiler:
                         6,
                     )
             else:
-                v = F.col(e.args[0].name)
-                dv = v - F.lag(v).over(w)
-                base = e.func.replace("NON_NEGATIVE_", "")
-                if base == "DIFFERENCE":
-                    # single IEEE subtraction of identical doubles —
-                    # deterministic without rounding (bucket-path
-                    # precedent)
-                    col = dv
-                else:  # DERIVATIVE — per unit, default 1s
-                    unit_ns = (
-                        e.args[1].ns
-                        if len(e.args) > 1 and isinstance(e.args[1], Dur)
-                        else 1_000_000_000
-                    )
-                    dt_units = (us - F.lag(us).over(w)) / F.lit(
-                        unit_ns / 1000.0
-                    )
-                    col = F.round(dv / dt_units, 6)
-                if e.func.startswith("NON_NEGATIVE_"):
-                    # InfluxQL omits negative results; NULL here, and
-                    # the all-null row drop below removes the point
-                    # (single-transform selects match InfluxQL exactly)
-                    col = F.when(col >= 0, col)
+                df, col = _series_transform(df, e, F.col(e.args[0].name), w)
             df = df.withColumn(f"_lag_{names[i]}", col)
-            if e.func in raw_lag_funcs or (
-                e.func in _TA_FUNCS and e.func not in _TA_EMIT_FIRST
-            ):
-                # warm-up rows (and InfluxQL's first-point rule) emit
+            if e.func not in _RUNNING and e.func not in _TA_EMIT_FIRST:
+                # first points, warm-up rows and omitted negatives emit
                 # NULL: the all-null drop below removes them, matching
-                # InfluxDB's emit-after-warm-up. EMA emits from the
-                # first point (renormalized warm-up), so it never
-                # forces a drop.
+                # InfluxDB's emit-after-warm-up. EMA and the running
+                # forms emit from the first point, so never force a drop.
                 lag_names.append(names[i])
         cols: list[Column] = [F.col("time")]
         if multi:
@@ -2313,10 +2221,7 @@ class _Compiler:
                 for fld in self.src_fields:
                     cols.append(F.col(fld))
                 continue
-            if (
-                isinstance(f.expr, Call)
-                and f.expr.func in raw_lag_funcs + raw_run_funcs + _TA_FUNCS
-            ):
+            if isinstance(f.expr, Call) and f.expr.func in _RAW_WINDOW_FUNCS:
                 cols.append(F.col(f"_lag_{names[i]}").alias(names[i]))
                 continue
             cols.append(self._scalar(f.expr).alias(names[i]))
@@ -2333,28 +2238,7 @@ class _Compiler:
     def _compile_agg(self, df: DataFrame, keys: list[str], multi: bool) -> DataFrame:
         st = self.stmt
         bucketed = st.group_time_ns is not None
-        if bucketed:
-            iv_us = st.group_time_ns // 1000
-            off_us = st.offset_ns // 1000
-            # TZ('zone'): buckets align to local wall time — floor the
-            # zone-shifted timestamp, then shift the bucket START back
-            # to its UTC instant. from_/to_utc_timestamp consult the
-            # IANA tzdb, so DST transitions move the boundary with the
-            # wall clock (pinned in tests/test_influxql.py).
-            tcol = (
-                F.from_utc_timestamp(F.col("time"), st.tz)
-                if st.tz
-                else F.col("time")
-            )
-            us = F.unix_micros(tcol) - F.lit(off_us)
-            # exact integer floor-to-bucket (no double division anywhere)
-            bucket = F.timestamp_micros(us - us % F.lit(iv_us) + F.lit(off_us))
-            if st.tz:
-                bucket = F.to_utc_timestamp(bucket, st.tz)
-            df = df.withColumn("_bucket", bucket)
-            gcols = keys + ["_bucket"]
-        else:
-            gcols = keys
+        df, gcols = self._bucketed(df, keys)
         if not gcols:
             df = df.withColumn("_g", F.lit(1))
             gcols = ["_g"]
@@ -2388,12 +2272,7 @@ class _Compiler:
             if c.func == "INTEGRAL":
                 if not c.args or not isinstance(c.args[0], Var):
                     raise InfluxQLError("INTEGRAL expects a field reference")
-                unit_ns = (
-                    c.args[1].ns
-                    if len(c.args) > 1 and isinstance(c.args[1], Dur)
-                    else 1_000_000_000
-                )
-                int_terms.add((c.args[0].name, unit_ns))
+                int_terms.add((c.args[0].name, _unit_ns(c)))
         for fld, unit_ns in sorted(int_terms):
             w = Window.partitionBy(*gcols).orderBy("time", *tb)
             us = F.unix_micros(F.col("time"))
@@ -2466,16 +2345,7 @@ class _Compiler:
             src_name = f"_in_{name}"
             for depth, e in enumerate(reversed(chain)):
                 src = F.col(src_name)
-                prev = F.lag(src).over(w)
-                prev_t = F.lag(F.col("time")).over(w)
-                base = e.func.replace("NON_NEGATIVE_", "")
-                if base == "DIFFERENCE":
-                    col = src - prev
-                elif base == "DERIVATIVE":
-                    unit_ns = e.args[1].ns if len(e.args) > 1 and isinstance(e.args[1], Dur) else 1_000_000_000
-                    dt_units = (F.unix_micros(F.col("time")) - F.unix_micros(prev_t)) / F.lit(unit_ns / 1000.0)
-                    col = F.round((src - prev) / dt_units, 6)
-                elif e.func == "CUMULATIVE_SUM":
+                if e.func == "CUMULATIVE_SUM":
                     wc = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
                     col = F.round(F.sum(src).over(wc), 6)
                 elif e.func == "MOVING_AVERAGE":
@@ -2486,41 +2356,8 @@ class _Compiler:
                     n = int(e.args[1].value)
                     wm = w.rowsBetween(-(n - 1), Window.currentRow)
                     col = F.round(F.sum(src).over(wm) / F.count(src).over(wm), 6)
-                elif e.func in _TA_FUNCS:
-                    # technical-analysis transform of an aggregate:
-                    # materialize the per-series value frame, fold it
-                    # in window order (kernels shared with the raw
-                    # path; temporaries dropped right after the level
-                    # lands). DEMA/TEMA/TRIX chain the EMA kernel
-                    # through materialized stage columns.
-                    n = _ta_n(e)
-                    if e.func in _TA_EMA_STAGES:
-                        cur, es = src, []
-                        for s in range(_TA_EMA_STAGES[e.func]):
-                            out = out.withColumn(
-                                f"_ta_l{s}",
-                                _ta_list(
-                                    "EXPONENTIAL_MOVING_AVERAGE",
-                                    n, cur, w,
-                                ),
-                            )
-                            out = out.withColumn(
-                                f"_ta_e{s}",
-                                _ta_fold(
-                                    "EXPONENTIAL_MOVING_AVERAGE",
-                                    n, f"_ta_l{s}",
-                                ),
-                            )
-                            cur = F.col(f"_ta_e{s}")
-                            es.append(cur)
-                        col = _ta_compose(e.func, es, w)
-                    else:
-                        out = out.withColumn(
-                            "_ta_l", _ta_list(e.func, n, src, w)
-                        )
-                        col = _ta_fold(e.func, n, "_ta_l")
-                if e.func.startswith("NON_NEGATIVE_"):
-                    col = F.when(col >= 0, col)  # negative results omitted
+                else:
+                    out, col = _series_transform(out, e, src, w)
                 last = depth == len(chain) - 1
                 src_name = name if last else f"_t{depth}_{name}"
                 out = out.withColumn(src_name, col)
@@ -2592,11 +2429,6 @@ class _Compiler:
         if fn == "STDDEV":
             return F.round(F.stddev(col), 4)
         if fn == "INTEGRAL":
-            unit_ns = (
-                c.args[1].ns
-                if len(c.args) > 1 and isinstance(c.args[1], Dur)
-                else 1_000_000_000
-            )
             # InfluxDB reports 0 (not NULL) for a single-point group —
             # a lone point bounds zero area. NOTE a documented
             # deviation stays: a trapezoid segment spanning a bucket
@@ -2604,7 +2436,7 @@ class _Compiler:
             # across the adjacent buckets (intra-bucket-only choice,
             # pinned in tests/test_influxql_negative.py).
             return F.coalesce(
-                F.sum(F.col(f"_int_{arg.name}_{unit_ns}")) / 1000.0,
+                F.sum(F.col(f"_int_{arg.name}_{_unit_ns(c)}")) / 1000.0,
                 F.lit(0.0),
             )
         if fn == "FIRST":
@@ -2645,16 +2477,14 @@ class _Compiler:
             raise InfluxQLError("fill() with TZ() is not supported")
         iv_us = st.group_time_ns // 1000
         off_us = st.offset_ns // 1000
-        lo = F.unix_micros(F.lit(self.time_lo).cast("timestamp")) - F.lit(off_us)
+        lo = F.unix_micros(F.lit(self.time_lo).cast("timestamp"))
         # last bucket that can contain an in-range point (hi exclusive
         # unless the bound was <=)
-        hi = (
-            F.unix_micros(F.lit(self.time_hi).cast("timestamp"))
-            - F.lit(off_us)
-            - (0 if self.hi_incl else 1)
+        hi = F.unix_micros(F.lit(self.time_hi).cast("timestamp")) - (
+            0 if self.hi_incl else 1
         )
-        lo_us = (lo - lo % F.lit(iv_us) + F.lit(off_us)).cast("long")
-        hi_us = (hi - hi % F.lit(iv_us) + F.lit(off_us)).cast("long")
+        lo_us = _floor_us(lo, iv_us, off_us).cast("long")
+        hi_us = _floor_us(hi, iv_us, off_us).cast("long")
         spine = self.spark.range(1).select(
             F.explode(
                 F.sequence(lo_us, hi_us, F.lit(iv_us).cast("long"))

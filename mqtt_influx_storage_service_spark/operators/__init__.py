@@ -50,7 +50,10 @@ _PRIORITY = [
     # cohort, now the oldest driver rows in the registry (recomputed
     # from CORRECTNESS_r01..r14 this round: 41 entries whose newest
     # driver row is r10 — the r14 comment said 42; the recount says
-    # 41). All oracle-backed.
+    # 41). All oracle-backed. iq_derivative_daily and
+    # iq_nonneg_derivative stay inside the prefix on their own account
+    # too: the shared series-transform kernel rewrote their plans
+    # (bucket DERIVATIVE lags unix_micros(time), not time).
     "dedup_substring",
     "dedup_substring_spans",
     "iq_agg_arithmetic",

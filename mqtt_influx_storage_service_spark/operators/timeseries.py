@@ -2153,6 +2153,31 @@ HW_TAIL_SALT = 8    # hot-series tail selection fans out over 8 tasks
 HW_HORIZON = 3
 
 
+def hw_linear_fold(xs: "F.Column") -> "F.Column":
+    """``struct(l, b)`` fold column for Holt's linear-trend recurrence
+    over a value array ``xs`` — shared by :func:`ts_holt_winters` and
+    the InfluxQL compiler's ``HOLT_WINTERS(…, N, 0)`` lowering. Init:
+    l₂ = x₂, b₂ = x₂ − x₁. l′ appears EXPANDED inside b′ — identical
+    association to the DuckDB recursive-CTE twin."""
+    a, na = F.lit(HW_ALPHA), F.lit(1 - HW_ALPHA)
+    b, nb = F.lit(HW_BETA), F.lit(1 - HW_BETA)
+    init = F.struct(
+        F.element_at(xs, 2).alias("l"),
+        (F.element_at(xs, 2) - F.element_at(xs, 1)).alias("b"),
+    )
+    return F.aggregate(
+        F.slice(xs, 3, F.greatest(F.size(xs) - 2, F.lit(0))),
+        init,
+        lambda acc, x: F.struct(
+            (a * x + na * (acc["l"] + acc["b"])).alias("l"),
+            (
+                b * (a * x + na * (acc["l"] + acc["b"]) - acc["l"])
+                + nb * acc["b"]
+            ).alias("b"),
+        ),
+    )
+
+
 def ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holt's linear-trend forecast per series (the non-seasonal
     ``HOLT_WINTERS(h, 0)`` of InfluxQL): fit level+trend on the last
@@ -2229,25 +2254,9 @@ def ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("xs") >= 2)
     )
     xs = F.col("xs")
-    a, na, b, nb = (F.lit(v) for v in (HW_ALPHA, 1 - HW_ALPHA, HW_BETA, 1 - HW_BETA))
-    init = F.struct(
-        F.element_at(xs, 2).alias("l"),
-        (F.element_at(xs, 2) - F.element_at(xs, 1)).alias("b"),
-    )
-    # identical association as the SQL twin: l' appears expanded in b'
-    fold = F.aggregate(
-        F.slice(xs, 3, F.greatest(F.size(xs) - 2, F.lit(0))),
-        init,
-        lambda acc, x: F.struct(
-            (a * x + na * (acc["l"] + acc["b"])).alias("l"),
-            (
-                b * (a * x + na * (acc["l"] + acc["b"]) - acc["l"])
-                + nb * acc["b"]
-            ).alias("b"),
-        ),
-    )
     fitted = arrs.select(
-        "user_id", "event_type", F.size(xs).alias("n_fit"), fold.alias("st")
+        "user_id", "event_type", F.size(xs).alias("n_fit"),
+        hw_linear_fold(xs).alias("st"),
     )
     # Emit RAW doubles: the fold is a fixed IEEE sequence verified
     # bit-identical across Spark, DuckDB, and a Python reference, so the

@@ -10,8 +10,10 @@ stream is maintained by touching only each micro-batch once, and reads
 hit the few-row snapshot, never the raw history.
 
 Supported inner-select surface: one or more of COUNT / SUM / MIN /
-MAX / MEAN over a field, ``GROUP BY time(<dur>)[, tags]``, optional
-WHERE. Partials per aggregate:
+MAX / MEAN over a field, ``GROUP BY time(<dur>[, <offset>])[, tags]``,
+optional ``TZ('<zone>')``, optional WHERE. Points land in the same
+bucket as in the batch compiler (one ``time_bucket``, offset and TZ
+included). Partials per aggregate:
 
 - COUNT → row count (combine: sum)
 - SUM, MEAN → exact integer-cent sum + count (combine: sum) — the
@@ -60,6 +62,7 @@ from ..functions.influxql import (
     events_points,
     parse_continuous_query,
     resolve_from,
+    time_bucket,
 )
 from ..tableformat import SnapshotTable
 from .sink import additive_combine, start_continuous_aggregate
@@ -84,7 +87,6 @@ class CompiledCQ:
     multi: bool
     key_cols: list[str]
     group_tags: list[str]
-    iv_us: int
     aggs: list[_AggSpec]
     # RESAMPLE EVERY → trigger interval (µs); RESAMPLE FOR → per-batch
     # late-data horizon (µs) — see parse_continuous_query.
@@ -148,7 +150,6 @@ def compile_cq(cq_text: str, catalog=None) -> CompiledCQ:
         multi,
         key_cols,
         group_tags,
-        st.group_time_ns // 1000,
         aggs,
         cq.every_ns // 1000 if cq.every_ns is not None else None,
         cq.for_ns // 1000 if cq.for_ns is not None else None,
@@ -162,9 +163,9 @@ def cq_partials(cc: CompiledCQ, batch: DataFrame) -> DataFrame:
     df = events_points(batch).filter(F.col("measurement").isin(cc.measurements))
     if cc.stmt.where is not None:
         df = df.filter(_bare_compiler()._cond(cc.stmt.where))
-    us = F.unix_micros(F.col("time"))
+    st = cc.stmt
     df = df.withColumn(
-        "time", F.timestamp_micros(us - us % F.lit(cc.iv_us))
+        "time", time_bucket(F.col("time"), st.group_time_ns, st.offset_ns, st.tz)
     )
     if cc.for_us is not None:
         # RESAMPLE FOR: a point whose bucket ended more than FOR before

@@ -154,10 +154,22 @@ def test_resample_parse_and_horizon(spark):
     assert cq_partials(cc_all, batch).count() == 3
 
 
-def test_stream_equals_batch(spark, tmp_path):
+@pytest.mark.parametrize(
+    "inner",
+    [
+        INNER,
+        # GROUP BY offset and TZ(): the rollup lands points in the same
+        # buckets as the batch statement
+        INNER.replace("time(1d)", "time(1d, 6h)"),
+        INNER + " TZ('America/New_York')",
+    ],
+    ids=["plain", "offset", "tz"],
+)
+def test_stream_equals_batch(spark, tmp_path, inner):
     src = _event_batches(spark, tmp_path)
+    cq = f"CREATE CONTINUOUS QUERY daily_stats ON telemetry BEGIN {inner} END"
     q, cc, table = start_continuous_query(
-        spark, CQ, src, str(tmp_path / "tbl"), str(tmp_path / "ckpt")
+        spark, cq, src, str(tmp_path / "tbl"), str(tmp_path / "ckpt")
     )
     q.awaitTermination(180)
     got = {
@@ -172,7 +184,7 @@ def test_stream_equals_batch(spark, tmp_path):
             r["mean_value"], r["n"], r["min_value"], r["max_value"],
             r["sum_value"],
         )
-        for r in influxql(spark, SF, INNER).collect()
+        for r in influxql(spark, SF, inner).collect()
     }
     assert got == want
 

@@ -961,6 +961,48 @@ def test_tz_dst_boundary(spark, sf_dir):
     ]
 
 
+_B1, _B2 = "2024-01-01 05:00:00", "2024-01-02 05:00:00"  # NY midnights
+_ALL3 = [(_B1, 1.0), (_B1, 3.0), (_B2, 5.0)]
+
+
+@pytest.mark.parametrize(
+    "field, time_col, want",
+    [
+        ("MAX(value) AS v, host", "time", [(_B1, 3.0), (_B2, 5.0)]),
+        ("TOP(value, 1) AS v", "bucket", [(_B1, 3.0), (_B2, 5.0)]),
+        ("BOTTOM(value, host, 2) AS v", "bucket", _ALL3),
+        ("SAMPLE(value, 2) AS v", "bucket", _ALL3),
+        ("DISTINCT(value) AS v", "time", _ALL3),
+        # local-day means 2.0, 5.0: l = 5, b = 3, one step ahead
+        (
+            "HOLT_WINTERS(MEAN(value), 1, 0) AS v", "time",
+            [("2024-01-03 05:00:00", 8.0)],
+        ),
+    ],
+    ids=["selector_bare", "top", "bottom_tags", "sample", "distinct",
+         "holt_winters"],
+)
+def test_tz_buckets_every_shape(spark, sf_dir, field, time_col, want):
+    """TZ() moves every GROUP BY time() shape onto the local-midnight
+    buckets the aggregate path uses (test_tz_dst_boundary): 22:30 and
+    03:00 UTC fall on the same New York day."""
+    cat = _TinyCatalog(
+        [
+            ("2024-01-01 22:30:00", "a", 1.0, 1),
+            ("2024-01-02 03:00:00", "b", 3.0, 2),
+            ("2024-01-02 12:00:00", "a", 5.0, 3),
+        ]
+    )
+    rows = influxql(
+        spark, sf_dir,
+        f"SELECT {field} FROM m "
+        "WHERE time >= '2024-01-01' AND time < '2024-01-03' "
+        "GROUP BY time(1d) TZ('America/New_York')",
+        catalog=cat,
+    ).collect()
+    assert sorted((str(r[time_col]), r.v) for r in rows) == want
+
+
 def test_tz_requires_group_by_time(spark, sf_dir):
     with pytest.raises(InfluxQLError, match="TZ"):
         influxql(
